@@ -20,16 +20,18 @@ object Bench {
     // added, which silently reshuffles warm-up effects between rounds
     def timed(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
       val t0 = System.nanoTime()
-      try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
-      val dt = (System.nanoTime() - t0) / 1e9
-      // Queries may cache intermediates; nothing unpersists them once the
-      // result is counted. Drop them so 70+ queries in one session don't
-      // accumulate storage-memory pressure that skews later measurements.
-      // BLOCKING on purpose: async unpersist overlaps block eviction with
-      // the next timed run and charges it the cleanup cost.
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
-      dt
+      try {
+        fn(spark, sfDir).count()
+        (System.nanoTime() - t0) / 1e9
+      } finally {
+        // Queries may cache intermediates; nothing unpersists them once the
+        // result is counted. Drop them so 70+ queries in one session don't
+        // accumulate storage-memory pressure that skews later measurements.
+        // BLOCKING on purpose: async unpersist overlaps block eviction with
+        // the next timed run and charges it the cleanup cost.
+        spark.catalog.clearCache()
+        spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
+      }
     }
     // one UNTIMED warmup execution, then three timed ones, headline =
     // MEDIAN: single-shot timings swung 3-5x between rounds with no code
@@ -55,12 +57,20 @@ object Bench {
     }
     val calibBefore = Seq.fill(3)(calibrate())
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
+    val failed = scala.collection.mutable.ArrayBuffer.empty[String]
     val results = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => only.forall(_.contains(n)) }
-      .map { case (name, fn) =>
-      val warm = timed(name, fn)
-      val runs = Seq.fill(3)(timed(name, fn))
-      (name, runs.sorted.apply(1), warm +: runs)
+      .flatMap { case (name, fn) =>
+      try {
+        val warm = timed(name, fn)
+        val runs = Seq.fill(3)(timed(name, fn))
+        Some((name, runs.sorted.apply(1), warm +: runs))
+      } catch {
+        case scala.util.control.NonFatal(e) =>
+          System.err.println(s"FAILED $name: $e")
+          failed += name
+          None
+      }
     }
     // ONE compact JSON line: the driver captures only a bounded tail of
     // stdout, and r01/r02 proved a full-precision cold+warm dump (~6 KB)
@@ -125,5 +135,9 @@ object Bench {
     } catch { case _: Throwable => () }
     println(headline)
     spark.stop()
+    if (failed.nonEmpty) {
+      System.err.println(s"${failed.size} queries failed: ${failed.mkString(",")}")
+      sys.exit(1)
+    }
   }
 }

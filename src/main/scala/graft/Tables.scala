@@ -1,6 +1,9 @@
 package graft
 
+import java.util.concurrent.ConcurrentHashMap
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Loaders for the driver-generated testdata tables (TESTDATA.md). One
   * parquet per table under a scale-factor directory. */
@@ -9,8 +12,52 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  def load(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+  /** Session confs that change what parquet schema inference returns
+    * (`spark.sql.legacy.parquet.nanosAsLong` is the one [[events]] sets). */
+  private val inferenceConfs = Seq(
+    "spark.sql.legacy.parquet.nanosAsLong", "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp", "spark.sql.parquet.inferTimestampNTZ.enabled")
+
+  private type SchemaKey = (String, Long, Long, Seq[Option[String]])
+
+  /** Inferred schemas, per session (weakly held: a stopped session's
+    * entries go with it). */
+  private val schemas = java.util.Collections.synchronizedMap(
+    new java.util.WeakHashMap[SparkSession, ConcurrentHashMap[SchemaKey, StructType]]())
+
+  /** `spark.read.parquet` of one table file, with the inferred schema
+    * cached per session. A plain read lists the file and runs a one-task
+    * schema-inference job on every call; here only the first load of a
+    * file infers, and later loads pass the schema to the reader, so no
+    * Spark job starts. The cache key is the file's resolved path,
+    * modification time and length plus the session's values of the
+    * [[inferenceConfs]]: a rewritten file (new length or mtime) or a
+    * changed inference conf has its schema inferred again. Every call
+    * still builds a fresh relation with fresh attribute ids, so two loads
+    * of one table self-join like two plain reads. A missing path or a
+    * directory is read uncached (a directory's own status does not change
+    * when a file inside it is rewritten). */
+  def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
+    val path = new Path(s"$sfDir/$name.parquet")
+    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val status: Option[FileStatus] =
+      try Some(fs.getFileStatus(path)).filter(_.isFile)
+      catch { case _: java.io.FileNotFoundException => None }
+    status match {
+      case None => spark.read.parquet(path.toString)
+      case Some(st) =>
+        val key: SchemaKey = (st.getPath.toString, st.getModificationTime, st.getLen,
+          inferenceConfs.map(spark.conf.getOption))
+        val cache = schemas.computeIfAbsent(spark, _ => new ConcurrentHashMap())
+        Option(cache.get(key)) match {
+          case Some(schema) => spark.read.schema(schema).parquet(path.toString)
+          case None =>
+            val df = spark.read.parquet(path.toString)
+            cache.put(key, df.schema)
+            df
+        }
+    }
+  }
 
   /** events.parquet has stored `ts` as parquet TIMESTAMP(NANOS) (read
     * nanos-as-long + convert) and, in newer testdata generations, as

@@ -19,8 +19,10 @@ import graft.geo.GeoFunctions
   *     array<struct{id, change map<string,string>}>`, `deleted
   *     array<array<string>>`.
   *
-  * Scale notes: store `places` partitioned by a tileid prefix
-  * (TileLayoutSpec layout) so `geoTile` is partition pruning; `operations`
+  * Scale notes: store `places` partitioned by `tile4`, the 4-char tileid
+  * prefix (TileLayoutSpec layout). The contract is `tile4 =
+  * substring(tileid, 1, 4)`: when `places` has a `tile4` column, `geoTile`
+  * adds the equality on it, so the scan reads one partition. `operations`
   * partitioned by block date so `history` prunes to the window. Every
   * method returns a lazy DataFrame — composition stays in Catalyst.
   */
@@ -39,10 +41,14 @@ final class PlacesEngine(places: DataFrame, operations: DataFrame) {
 
   /** §3.1 `GET /geo/data?tileid=` — tombstone-filtered feature projection
     * of one tile (B1/B2/B9/B11/E2). Param trimmed to the 6-char tile key
-    * like BaseOprPlaceDataProvider.java:343-349. */
+    * like BaseOprPlaceDataProvider.java:343-349. On a `tile4`-partitioned
+    * `places` the scan keeps the tile's one partition. */
   def geoTile(tileId: String): DataFrame = {
     val t6 = tileId.take(6)
-    places.where(col("tileid") === t6 && col("deleted").isNull)
+    val inTile =
+      if (places.columns.contains("tile4")) col("tileid") === t6 && col("tile4") === t6.take(4)
+      else col("tileid") === t6
+    places.where(inTile && col("deleted").isNull)
       .select(
         concat_ws(",", col("id")).as("opr_id"),
         col("placetype"),

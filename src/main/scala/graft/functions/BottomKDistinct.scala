@@ -2,7 +2,7 @@ package graft.functions
 
 import java.nio.ByteBuffer
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{AnalysisException, SparkSession}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
@@ -132,13 +132,20 @@ object BottomKDistinct {
   val info = new ExpressionInfo(classOf[BottomKDistinct].getName,
     "bottom_k_distinct")
 
-  /** Idempotently register `bottom_k_distinct` with a session. */
+  /** Idempotently register `bottom_k_distinct` with a session. A call with
+    * other than two arguments fails analysis with WRONG_NUM_ARGS. */
   def register(spark: SparkSession): Unit = {
     val name = FunctionIdentifier("bottom_k_distinct")
     if (!spark.sessionState.functionRegistry.functionExists(name)) {
       spark.sessionState.functionRegistry.registerFunction(
         name, info,
-        (exprs: Seq[Expression]) => BottomKDistinct(exprs.head, exprs(1)))
+        (exprs: Seq[Expression]) => exprs match {
+          case Seq(child, k) => BottomKDistinct(child, k)
+          case _ => throw new AnalysisException("WRONG_NUM_ARGS.WITHOUT_SUGGESTION",
+            Map("functionName" -> "`bottom_k_distinct(expr, k)`", "expectedNum" -> "2",
+              "actualNum" -> exprs.length.toString,
+              "docroot" -> org.apache.spark.SPARK_DOC_ROOT))
+        })
     }
   }
 }

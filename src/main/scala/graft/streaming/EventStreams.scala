@@ -303,40 +303,25 @@ object EventStreams {
       .outputMode(OutputMode.Update())
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        val spark = batch.sparkSession
         val w = org.apache.spark.sql.expressions.Window
           .partitionBy("key").orderBy(col("version").desc)
         val deduped = batch
           .withColumn("rn", row_number().over(w))
           .where(col("rn") === 1).drop("rn")
-          .cache() // two consumers: touched-tile list + merge
-        // ≤ the batch's distinct tiles — a driver-side list, never the data
-        val touched = deduped.select("tile4").distinct()
-          .collect().map(_.getString(0))
-        val existing = try {
-          spark.read.parquet(stateDir).where(col("tile4").isin(touched: _*))
-        } catch { case _: Throwable => spark.emptyDataFrame }
-        val merged = (if (existing.isEmpty) deduped
-          else existing.unionByName(deduped, allowMissingColumns = true)
-            .withColumn("rn", row_number().over(w))
-            .where(col("rn") === 1).drop("rn"))
-          // materialize BEFORE the write: the plan reads stateDir and
-          // Spark refuses to overwrite a path it is reading from
-          .localCheckpoint(true)
-        merged.write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("tile4").parquet(stateDir)
-        // invalidate-and-rebuild: summaries of exactly the touched tiles,
-        // recomputed from the merged (complete) state of those tiles
-        merged.groupBy("tile4")
-          .agg(count(lit(1)).as("n_places"),
-            sum(col("closed").cast("long")).as("n_closed"),
-            max("version").as("max_version"))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("tile4").parquet(summaryDir)
-        deduped.unpersist(false)
-        ()
+        upsertTouched(deduped, stateDir, "tile4", w) { merged =>
+          merged.write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("tile4").parquet(stateDir)
+          // invalidate-and-rebuild: summaries of exactly the touched tiles,
+          // recomputed from the merged (complete) state of those tiles
+          merged.groupBy("tile4")
+            .agg(count(lit(1)).as("n_places"),
+              sum(col("closed").cast("long")).as("n_closed"),
+              max("version").as("max_version"))
+            .write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("tile4").parquet(summaryDir)
+        }
       }
       .start()
   }
@@ -360,36 +345,63 @@ object EventStreams {
       .outputMode(OutputMode.Update())
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        val spark = batch.sparkSession
         val w = org.apache.spark.sql.expressions.Window
           .partitionBy("user_id").orderBy(col("event_id").desc)
         val deduped = batch
           .withColumn("bucket", pmod(xxhash64(col("user_id")), lit(numBuckets.toLong)))
           .withColumn("rn", row_number().over(w))
           .where(col("rn") === 1).drop("rn")
-          .cache() // two consumers: bucket list + merge
-        // ≤ numBuckets values — a driver-side list, never the data
-        val touched = deduped.select("bucket").distinct()
-          .collect().map(_.getLong(0))
-        val existing = try {
-          spark.read.parquet(stateDir).where(col("bucket").isin(touched: _*))
-        } catch { case _: Throwable => spark.emptyDataFrame }
-        val merged = (if (existing.isEmpty) deduped
-          else existing.unionByName(deduped, allowMissingColumns = true)
-            .withColumn("rn", row_number().over(w))
+        upsertTouched(deduped, stateDir, "bucket", w) { merged =>
+          merged.write.mode("overwrite")
+            // per-write option, not session config: only the buckets
+            // present in `merged` are replaced
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("bucket").parquet(stateDir)
+        }
+      }
+      .start()
+  }
+
+  /** The foreachBatch upsert shared by [[tileSummaryStream]] and
+    * [[applyOpsStream]]: last-wins (`lastWins` row 1) over the batch
+    * `deduped` plus the state rows of the `partCol` partitions it touches,
+    * materialised, then handed to `write`, which overwrites exactly those
+    * partitions.
+    *
+    * EXISTENCE decides whether there is prior state, as in
+    * SketchStream.countMinStream — never an exception catch: a read
+    * failure mapped to "no state" would make the overwrite replace the
+    * touched partitions with this batch's rows alone. A missing `stateDir`
+    * gives a batch-only merge; any other read error fails the batch, so
+    * the checkpoint retries it. An empty batch touches nothing and writes
+    * nothing (an empty write would leave a `stateDir` with no schema to
+    * read). `deduped`'s cache and the merge checkpoint are both released
+    * before returning, so no persisted RDD outlives the batch. */
+  private def upsertTouched(deduped: DataFrame, stateDir: String, partCol: String,
+                            lastWins: org.apache.spark.sql.expressions.WindowSpec)
+                           (write: DataFrame => Unit): Unit = {
+    val spark = deduped.sparkSession
+    deduped.cache() // two consumers: touched-partition list + merge
+    try {
+      // ≤ the batch's distinct partitions — a driver-side list, never the data
+      val touched = deduped.select(partCol).distinct().collect().map(_.get(0))
+      if (touched.nonEmpty) {
+        val path = new org.apache.hadoop.fs.Path(stateDir)
+        val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        val merged = (if (!fs.exists(path)) deduped
+          else spark.read.parquet(stateDir).where(col(partCol).isin(touched: _*))
+            .unionByName(deduped, allowMissingColumns = true)
+            .withColumn("rn", row_number().over(lastWins))
             .where(col("rn") === 1).drop("rn"))
           // materialize BEFORE the write: the merge plan reads stateDir,
           // and Spark (correctly) refuses to overwrite a path it is
           // reading from in the same plan
           .localCheckpoint(true)
-        merged.write.mode("overwrite")
-          // per-write option, not session config: only the buckets present
-          // in `merged` are replaced
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("bucket").parquet(stateDir)
-        deduped.unpersist(false)
-        ()
+        try write(merged)
+        finally merged.queryExecution.analyzed.collectFirst {
+          case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
+        }.foreach(_.unpersist(false))
       }
-      .start()
+    } finally deduped.unpersist(false)
   }
 }

@@ -106,6 +106,38 @@ class PlacesEngineSpec extends AnyFunSuite {
     }
   }
 
+  test("geoTile on a tile4-partitioned copy: same rows, scan pruned to the tile's partition") {
+    withSpark { spark =>
+      import org.apache.spark.sql.execution.FileSourceScanExec
+      val flat = spark.createDataFrame(spark.sparkContext.parallelize(placeRows), placesSchema)
+      val ops = spark.createDataFrame(spark.sparkContext.parallelize(opRows), opsSchema)
+      val dir = java.nio.file.Files.createTempDirectory("places-tile4").resolve("places").toFile
+      // the TileLayoutSpec layout: tile4 = substring(tileid, 1, 4)
+      flat.withColumn("tile4", substring(col("tileid"), 1, 4))
+        .write.partitionBy("tile4").parquet(dir.getAbsolutePath)
+      val onFlat = new PlacesEngine(flat, ops)
+      val onParts = new PlacesEngine(spark.read.parquet(dir.getAbsolutePath), ops)
+      val tiles = placeRows.map(_.getString(1)).distinct
+      assert(tiles.map(_.take(4)).distinct.size > 1) // pruning has a partition to skip
+      for (tile <- tiles) {
+        def rows(e: PlacesEngine) = e.geoTile(tile).collect().map(_.toString).sorted.toSeq
+        assert(rows(onParts) == rows(onFlat), tile)
+        val df = onParts.geoTile(tile)
+        df.collect()
+        val scans = graft.plans.PlanNodes.flatten(df.queryExecution.executedPlan)
+          .collect { case s: FileSourceScanExec => s }
+        assert(scans.size == 1, tile)
+        val scan = scans.head
+        assert(scan.partitionFilters.exists(_.references.exists(_.name == "tile4")),
+          s"$tile: ${scan.partitionFilters}")
+        val files = new java.io.File(dir, s"tile4=${tile.take(4)}").listFiles()
+          .count(_.getName.startsWith("part-"))
+        assert(scan.metrics("numPartitions").value == 1, tile)
+        assert(scan.metrics("numFiles").value == files, tile)
+      }
+    }
+  }
+
   test("summary: live places per 4-char prefix with cell centers") {
     withSpark { spark =>
       val engine = new PlacesEngine(

@@ -116,4 +116,21 @@ class EvalSpec extends AnyFunSuite {
       assert(out("d") == ((0L, 1L, 0L, 0.0, 0.0, 0.0)))
     } finally spark.stop()
   }
+
+  test("classifierEval: null truth or pred rows count 0, never null") {
+    val spark = session()
+    import spark.implicits._
+    try {
+      // e appears only with a null pred, f only with a null truth
+      val t = Seq[(String, String)](("a", "a"), ("e", null), (null, "f"))
+        .toDF("truth", "pred")
+      val out = Eval.classifierEval(t, "truth", "pred")
+      Seq("tp", "fp", "fn").foreach(c => assert(!out.schema(c).nullable, c))
+      val got = out.collect().map(r => Option(r.getString(0)) ->
+        Seq(1, 2, 3).map(i => if (r.isNullAt(i)) None else Some(r.getLong(i)))).toMap
+      assert(got(Some("a")) == Seq(Some(1L), Some(0L), Some(0L)))
+      assert(got(Some("e")) == Seq(Some(0L), Some(0L), Some(0L)))
+      assert(got(Some("f")) == Seq(Some(0L), Some(0L), Some(0L)))
+    } finally spark.stop()
+  }
 }

@@ -191,6 +191,131 @@ class EventStreamsSpec extends AnyFunSuite {
     }
   }
 
+  /** Every file under `dir` (relative path → bytes). */
+  private def snapshot(dir: String): Map[String, Seq[Byte]] = {
+    val root = java.nio.file.Paths.get(dir)
+    val walk = java.nio.file.Files.walk(root)
+    try {
+      import scala.jdk.CollectionConverters._
+      walk.iterator().asScala.filter(java.nio.file.Files.isRegularFile(_))
+        .map(f => root.relativize(f).toString -> java.nio.file.Files.readAllBytes(f).toSeq)
+        .toMap
+    } finally walk.close()
+  }
+
+  /** The first part file by path under `stateDir` — the one parquet
+    * schema inference reads — relative to `stateDir`. */
+  private def firstPart(stateDir: String): String =
+    snapshot(stateDir).keys.filter(_.split('/').last.startsWith("part-")).min
+
+  /** Overwrite a state file with bytes that are not parquet, and drop its
+    * checksum. */
+  private def corrupt(stateDir: String, rel: String): Unit = {
+    val f = new java.io.File(stateDir, rel)
+    java.nio.file.Files.write(f.toPath, "not a parquet file".getBytes("UTF-8"))
+    new java.io.File(f.getParentFile, s".${f.getName}.crc").delete()
+  }
+
+  test("applyOpsStream: a corrupt state file fails the batch; no bucket is rewritten") {
+    withSpark { spark =>
+      import spark.implicits._
+      import org.apache.spark.sql.functions.col
+      implicit val sqlCtx = spark.sqlContext
+      val tmp = java.nio.file.Files.createTempDirectory("ops-stream-fault").toFile
+      val stateDir = new java.io.File(tmp, "state").getAbsolutePath
+      val mem = MemoryStream[EventStreams.Event]
+      val q = EventStreams.applyOpsStream(mem.toDF(), stateDir,
+        new java.io.File(tmp, "ckpt").getAbsolutePath, numBuckets = 8)
+      try {
+        mem.addData((1L to 6L).map(u => EventStreams.Event(u, ts(0), u * 10, "view", 1.0)): _*)
+        q.processAllAvailable()
+        // batch 2 updates a user of the bucket that holds the corrupt file
+        val first = firstPart(stateDir)
+        val user = spark.read.parquet(stateDir)
+          .where(col("bucket") === first.takeWhile(_ != '/').stripPrefix("bucket=").toLong)
+          .select("user_id").as[Long].head()
+        corrupt(stateDir, first)
+        val state = snapshot(stateDir)
+        mem.addData(EventStreams.Event(7, ts(1), user, "click", 2.0))
+        intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+          q.processAllAvailable()
+        }
+        assert(snapshot(stateDir) == state)
+      } finally q.stop()
+    }
+  }
+
+  /** A tileSummaryStream over a fresh temp dir; `body` gets the input
+    * stream, the query, the state dir and the summary dir. */
+  private def withTileSummary(spark: SparkSession)(
+      body: (MemoryStream[(Long, String, Long, Boolean)],
+        org.apache.spark.sql.streaming.StreamingQuery, String, String) => Unit): Unit = {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val tmp = java.nio.file.Files.createTempDirectory("tile-mv-batches").toFile
+    val stateDir = new java.io.File(tmp, "state").getAbsolutePath
+    val summaryDir = new java.io.File(tmp, "summary").getAbsolutePath
+    val mem = MemoryStream[(Long, String, Long, Boolean)]
+    val q = EventStreams.tileSummaryStream(
+      mem.toDF().toDF("key", "tile4", "version", "closed"),
+      stateDir, summaryDir, new java.io.File(tmp, "ckpt").getAbsolutePath)
+    try body(mem, q, stateDir, summaryDir) finally q.stop()
+  }
+
+  /** tile4 → n_closed of a summary dir. */
+  private def closedPerTile(spark: SparkSession, summaryDir: String): Map[String, Long] =
+    spark.read.parquet(summaryDir).collect().map(r =>
+      r.getAs[String]("tile4") -> r.getAs[Long]("n_closed")).toMap
+
+  test("tileSummaryStream: a corrupt state file fails the batch; no tile is rewritten") {
+    withSpark { spark =>
+      withTileSummary(spark) { (mem, q, stateDir, summaryDir) =>
+        mem.addData((1L, "8FVC", 1L, false), (2L, "8FVC", 1L, true),
+          (3L, "9GXX", 1L, false))
+        q.processAllAvailable()
+        val first = firstPart(stateDir)
+        assert(first.startsWith("tile4=8FVC/"))
+        corrupt(stateDir, first)
+        val (state, summary) = (snapshot(stateDir), snapshot(summaryDir))
+        // batch 2 touches the corrupt tile: a merge with "no prior state"
+        // would overwrite 8FVC with key 2 alone
+        mem.addData((2L, "8FVC", 5L, false))
+        intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+          q.processAllAvailable()
+        }
+        assert(snapshot(stateDir) == state)
+        assert(snapshot(summaryDir) == summary)
+      }
+    }
+  }
+
+  test("tileSummaryStream: no persisted RDD outlives a batch") {
+    withSpark { spark =>
+      withTileSummary(spark) { (mem, q, _, summaryDir) =>
+        mem.addData((1L, "8FVC", 1L, false), (2L, "9GXX", 1L, true))
+        q.processAllAvailable()
+        mem.addData((1L, "8FVC", 2L, true))
+        q.processAllAvailable()
+        assert(spark.sparkContext.getPersistentRDDs.isEmpty,
+          spark.sparkContext.getPersistentRDDs.values.mkString(", "))
+        assert(closedPerTile(spark, summaryDir) == Map("8FVC" -> 1L, "9GXX" -> 1L))
+      }
+    }
+  }
+
+  test("tileSummaryStream: an empty batch writes nothing; the next batch merges") {
+    withSpark { spark =>
+      withTileSummary(spark) { (mem, q, stateDir, summaryDir) =>
+        mem.addData(Seq.empty[(Long, String, Long, Boolean)])
+        q.processAllAvailable()
+        assert(!new java.io.File(stateDir).exists())
+        mem.addData((1L, "8FVC", 1L, true))
+        q.processAllAvailable()
+        assert(closedPerTile(spark, summaryDir) == Map("8FVC" -> 1L))
+      }
+    }
+  }
+
   test("OSM diff stream: parse -> CDC classify -> bucketed state (the sync-bot loop)") {
     withSpark { spark =>
       import spark.implicits._
