@@ -181,16 +181,20 @@ object CatalogPlaces {
     val n = Tables.eventCount(s, d) // memoized — no extra scan per query
     val radiusM = math.min(100000.0 * math.sqrt(10000.0 / n),
       graft.geo.GeoJoins.MaxRadiusM)
-    val edges = graft.geo.GeoJoins.pairsWithin(pts, "k", "lat", "lon", radiusM)
-      .select(col("a_key").as("a"), col("b_key").as("b"))
-      // few edges (sparse by construction) — pack them so each contraction
-      // round schedules a handful of tasks, not 32 near-empty ones
-      .coalesce(8)
-    val labels = graft.geo.ConnectedComponents.label(s, edges)
-    pts.select(col("k").as("node"))
-      .join(labels, Seq("node"), "left")
-      .select(col("node"), coalesce(col("cluster"), col("node")).as("cluster"))
-      .orderBy("node")
+    // the labels are checkpointed, so the pairs' points cache is dead once
+    // they exist: this scope frees it on return
+    graft.util.Materialize.scoped { scope =>
+      val edges = graft.geo.GeoJoins.pairsWithin(scope, pts, "k", "lat", "lon", radiusM)
+        .select(col("a_key").as("a"), col("b_key").as("b"))
+        // few edges (sparse by construction) — pack them so each contraction
+        // round schedules a handful of tasks, not 32 near-empty ones
+        .coalesce(8)
+      val labels = graft.geo.ConnectedComponents.label(s, edges)
+      pts.select(col("k").as("node"))
+        .join(labels, Seq("node"), "left")
+        .select(col("node"), coalesce(col("cluster"), col("node")).as("cluster"))
+        .orderBy("node")
+    }
   }
 
   /** D4/D5 merge scoring, distributed form: per closed place, the best

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 
 /** Dev tool: print the formatted physical plan of catalog queries.
@@ -9,14 +8,9 @@ object Explain {
     val names = args(0).split(",")
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.01"
     val mode = ExplainMode.fromString(if (args.length > 2) args(2) else "formatted")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // plan printing must not execute the curation funnel's stage caches
-      .config("graft.curation.eagerStages", "false")
-      .getOrCreate()
+    val spark = Sessions.local()
+    // plan printing must not execute the curation funnel's stage caches
+    spark.conf.set("graft.curation.eagerStages", "false")
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { n =>
       println(s"==== $n ====")

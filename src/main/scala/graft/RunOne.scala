@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev helper: run one catalog query, print rowcount, time, and plan.
   * Usage: tools/run.sh graft.RunOne <query> [sfDir] [--explain] */
 object RunOne {
@@ -9,14 +7,7 @@ object RunOne {
     val name = args(0)
     val sfDir = if (args.length > 1 && !args(1).startsWith("--")) args(1)
       else "/root/testdata/sf0.01"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local()
     if (args.contains("--stages")) {
       // floor in ms below which a stage is not printed; GRAFT_STAGE_MS=0
       // shows every stage (overhead-dominated queries are many small stages)

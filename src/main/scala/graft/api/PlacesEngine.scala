@@ -159,13 +159,6 @@ final class PlacesEngine(places: DataFrame, operations: DataFrame) {
       .join(alreadyReviewed.select(col("id")), Seq("id"), "left_anti")
   }
 
-  /** §3.3 MergePlaceBot pipeline over an ordered report-feature Dataset
-    * (I1 group split → D4/D5 per-group tiered matching), delegated to the
-    * merge job validated against the reference's June-2021 regression. */
-  def mergeReport(features: org.apache.spark.sql.Dataset[
-      graft.places.MergeReportJob.ReportFeature]): DataFrame =
-    graft.places.MergeReportJob.run(features).toDF()
-
   /** D2/I2 clustering of a history window's features (the scalable form of
     * the reference's greedy 150 m grouping): proximity pairs from the
     * tile-bucketed distance join, components from the DataFrame-native

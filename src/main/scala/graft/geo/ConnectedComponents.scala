@@ -3,6 +3,8 @@ package graft.geo
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.util.Materialize
+
 /** Connected components as pure DataFrame iteration — the scalable label
   * assignment behind history clustering (reference:
   * openplacereviews-core/src/main/java/org/openplacereviews/api/
@@ -24,14 +26,10 @@ import org.apache.spark.sql.functions._
   *     large-star / small-star (Kiveris et al., "Connected Components in
   *     MapReduce and Beyond", SoCC'14) — each round one hash-aggregate and
   *     one shuffled join, no RDD vertex-program runtime, O(log n) rounds.
-  *     Rounds are chained through lazy localCheckpoint: the returned
-  *     Dataset roots at a LogicalRDD, so the plan stays constant-size and
-  *     unpersisting an earlier round can never invalidate a later one via
-  *     the CacheManager (DataFrame-persist chaining does exactly that —
-  *     non-cascading uncache drops dependents' materialized data, which
-  *     recomputes every prior round and turns the loop exponential).
-  *     On a cluster, prefer reliable checkpointing (setCheckpointDir +
-  *     .checkpoint()) for executor-loss recovery; structure is identical.
+  *     Rounds are chained through lazy checkpoints
+  *     ([[graft.util.Materialize]]), so the plan stays constant-size and
+  *     each round's fingerprint job also materialises it; the round
+  *     before is freed right after.
   */
 object ConnectedComponents {
 
@@ -49,15 +47,15 @@ object ConnectedComponents {
     *         `coalesce(cluster, node)` (their component is themselves)
     */
   def label(spark: SparkSession, edges: DataFrame,
-            localThreshold: Long = 1L << 22): DataFrame = {
+            localThreshold: Long = 1L << 22): DataFrame = Materialize.scoped { s =>
     import spark.implicits._
 
     // stage 1: per-partition union-find contraction (narrow, no shuffle)
-    val forest = edges
+    val forest = s.checkpoint(edges
       .select($"a", $"b").as[(Long, Long)]
       .mapPartitions(it => contract(it, emitRoots = false))
-      .toDF("u", "v") // star edges, u > v
-      .localCheckpoint(false)
+      .toDF("u", "v"), // star edges, u > v
+      eager = false)
     val m = forest.count() // materializes the checkpoint
 
     if (m <= localThreshold) {
@@ -67,7 +65,7 @@ object ConnectedComponents {
         .toDF("node", "cluster")
     } else {
       // stage 3: large-star/small-star until fixed point
-      starContraction(spark, forest)
+      starContraction(s, forest)
     }
   }
 
@@ -99,15 +97,10 @@ object ConnectedComponents {
       .filter { case (k, r) => emitRoots || k != r }
   }
 
-  private def starContraction(spark: SparkSession, edges0: DataFrame): DataFrame = {
-    import spark.implicits._
-    val sc = spark.sparkContext
-    var before = sc.getPersistentRDDs.keySet
+  private def starContraction(s: Materialize.Scope, edges0: DataFrame): DataFrame = {
+    import edges0.sparkSession.implicits._
     var e = edges0 // canonical (u, v), v < u — contract() guarantees it
     var stats = checksum(e)
-    // this round's checkpoint RDDs — unpersisted once the NEXT round is
-    // materialized (a truncated round never recomputes, so this is safe)
-    var prevRoundRdds: scala.collection.Set[Int] = Set.empty[Int]
     var converged = false
     var round = 0
     // log2(n)-ish bound; the checksum test exits far earlier in practice
@@ -133,26 +126,21 @@ object ConnectedComponents {
       // ---- small-star: edges are now oriented child u → parent v < u;
       //      point every parent (and u itself) at m = min of u's parents ----
       val minNbr2 = large.groupBy("u").agg(min("v").as("m"))
-      before = sc.getPersistentRDDs.keySet
-      val small = large.join(minNbr2, "u")
+      val small = s.checkpoint(large.join(minNbr2, "u")
         .where($"v" =!= $"m")
         .select($"v".as("u"), $"m".as("v")) // re-parent non-min parents (v > m)
         .union(minNbr2.select($"u", $"m".as("v"))) // keep u attached to m
-        .distinct()
-        .localCheckpoint(false)
+        .distinct(), eager = false)
 
       // single materializing job per round: the fingerprint scan runs the
-      // round AND caches the (lazy) local checkpoint
+      // round AND caches the (lazy) local checkpoint, after which the
+      // previous round is unreferenced
       val next = checksum(small)
       converged = next == stats
       stats = next
-      val thisRound = sc.getPersistentRDDs.keySet -- before
-      prevRoundRdds.foreach(id => sc.getPersistentRDDs.get(id).foreach(_.unpersist(false)))
-      prevRoundRdds = thisRound
+      s.release(e)
       e = small
       round += 1
-      if (sys.env.contains("GRAFT_CC_DEBUG"))
-        System.err.println(s"[cc] round=$round edges=${next._1} fp=${next._2} converged=$converged")
     }
 
     if (!converged)

@@ -3,6 +3,8 @@ package graft.geo
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.util.Materialize
+
 /** Distance self-join: all point pairs within `radiusM` meters, as a
   * bucketed equi-join (never a cross join).
   *
@@ -29,9 +31,16 @@ object GeoJoins {
   val MaxRadiusM = 190000.0
 
   /** (a_key, b_key, dist_m) for all pairs with dist < radiusM, a_key < b_key.
-    * `points` must have (keyCol, latCol, lonCol); keys must be unique. */
+    * `points` must have (keyCol, latCol, lonCol); keys must be unique. The
+    * lazy result reads a cache of the points, kept until caches are
+    * dropped — or owned by the scope `s` of a caller that consumes the
+    * pairs before it returns (pl3). */
   def pairsWithin(points: DataFrame, keyCol: String, latCol: String,
-                  lonCol: String, radiusM: Double): DataFrame = {
+                  lonCol: String, radiusM: Double): DataFrame =
+    Materialize.scoped(pairsWithin(_, points, keyCol, latCol, lonCol, radiusM))
+
+  def pairsWithin(s: Materialize.Scope, points: DataFrame, keyCol: String,
+                  latCol: String, lonCol: String, radiusM: Double): DataFrame = {
     require(radiusM >= GeoBands.MinRadiusM,
       s"radius $radiusM below packing bound ${GeoBands.MinRadiusM}")
     // register on the session that OWNS the frame (not SparkSession.active:
@@ -43,10 +52,9 @@ object GeoJoins {
     // parallelism (a single-file parquet scan is 1-2 tasks), and cache so
     // the probe and build legs don't each recompute the encode
     val par = points.sparkSession.sparkContext.defaultParallelism
-    val pts = points.select(col(keyCol).as("k"), col(latCol).as("lat"),
+    val pts = s.persist(points.select(col(keyCol).as("k"), col(latCol).as("lat"),
         col(lonCol).as("lon"))
-      .repartition(par)
-      .cache()
+      .repartition(par))
     val probe = pts.select(col("k").as("a_key"), col("lat").as("a_lat"),
       col("lon").as("a_lon"),
       explode(call_function("geo_band_keys",

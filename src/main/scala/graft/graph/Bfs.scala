@@ -3,6 +3,8 @@ package graft.graph
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.util.Materialize
+
 /** Multi-source breadth-first search — hop distances from a seed set,
   * the reachability/recency primitive behind crawl frontier scheduling
   * ("how far is this page from a trusted seed"), link-spam distance
@@ -22,9 +24,11 @@ import org.apache.spark.sql.functions._
   * against the frontier (frontier ships to the edges' layout — only node
   * ids move, never edges), one map-side-combinable `distinct` on the
   * discovered set, and one anti-join against the visited set. Frontier
-  * and visited relations hold only (node, dist) pairs. Per-round persists
-  * keep the unrolled plan linear in rounds; hub fan-out collapses in the
-  * distinct's partial aggregation before the exchange.
+  * and visited relations hold only (node, dist) pairs; each hop's
+  * frontier is persisted and its visited set checkpointed
+  * ([[graft.util.Materialize]]), and hop h−1's are freed once hop h is
+  * materialised. Hub fan-out collapses in the distinct's partial
+  * aggregation before the exchange.
   *
   * Determinism: a pure set recurrence on integers — independent of
   * partitioning, order, and engine.
@@ -38,30 +42,26 @@ object Bfs {
     * reached within `maxHops` are absent. */
   def distances(edges: DataFrame, srcCol: String, dstCol: String,
                 sources: DataFrame, sourceCol: String,
-                maxHops: Int): DataFrame = {
+                maxHops: Int): DataFrame = Materialize.scoped { s =>
     require(maxHops >= 1 && maxHops <= 50, s"maxHops=$maxHops")
-    val e = edges.select(col(srcCol).cast("long").as("src"),
+    val e = s.persist(edges.select(col(srcCol).cast("long").as("src"),
         col(dstCol).cast("long").as("dst"))
       .where(col("src").isNotNull && col("dst").isNotNull)
-      .repartition(col("src"))
-      .persist()
+      .repartition(col("src")))
 
-    var visited = sources.select(col(sourceCol).cast("long").as("node"))
-      .distinct().withColumn("dist", lit(0)).persist()
-    var frontier = visited.select("node")
+    var visited = s.persist(sources.select(col(sourceCol).cast("long").as("node"))
+      .distinct().withColumn("dist", lit(0)))
+    var frontier = visited
     for (h <- 1 to maxHops) {
-      val next = e
-        .join(frontier.withColumnRenamed("node", "src"), "src")
+      val (seen, from) = (visited, frontier)
+      frontier = s.persist(e
+        .join(from.select(col("node").as("src")), "src")
         .select(col("dst").as("node")).distinct()
-        .join(visited, Seq("node"), "left_anti")
-        .withColumn("dist", lit(h))
-        .persist()
-      // localCheckpoint: visited_h is referenced twice per hop (anti-join
-      // + union), so an un-truncated analyzed plan doubles per hop and
-      // Spark's per-AQE-event plan stringification goes exponential (the
-      // p49 lesson)
-      visited = visited.unionByName(next).localCheckpoint()
-      frontier = next.select("node")
+        .join(seen, Seq("node"), "left_anti")
+        .withColumn("dist", lit(h)))
+      // checkpointed: visited_h is read twice per hop (anti-join + union)
+      visited = s.checkpoint(seen.unionByName(frontier))
+      s.release(seen, from)
     }
     visited
   }

@@ -3,6 +3,8 @@ package graft.graph
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.util.Materialize
+
 /** HITS (Kleinberg 1999) — hubs and authorities by mutual reinforcement:
   * a node is a good AUTHORITY when good hubs point at it, a good HUB
   * when it points at good authorities. The directional companion to
@@ -33,43 +35,35 @@ import org.apache.spark.sql.functions._
   * deferred to one left-join in the final select — two node-sized joins
   * saved per round, bit-identical output.
   *
-  * Each half-round `localCheckpoint`s (eager): the plan would otherwise
-  * double per round (each round references the previous twice), and the
-  * checkpoint gives a materialization point after which the PREVIOUS
-  * round's blocks are provably unreferenced and are freed immediately —
-  * peak cache is two score relations plus the two edge copies, not
-  * 2·rounds relations. The final round's two checkpoints stay cached:
-  * they are the returned working set (the [[graft.pipeline.Bpe]]
-  * convention), freed when the caller drops caches.
+  * Each half-round is checkpointed eagerly ([[graft.util.Materialize]]):
+  * the plan would otherwise double per round (each round references the
+  * previous twice), and the checkpoint gives a materialization point
+  * after which the PREVIOUS round's blocks are provably unreferenced and
+  * are freed immediately — peak cache is two score relations plus the two
+  * edge copies, not 2·rounds relations. The result reads the final
+  * round's two checkpoints and the node set (which reads the src copy),
+  * so those stay cached until the caller drops caches; the dst copy is
+  * freed on return.
   */
 object Hits {
-
-  /** The persisted-RDD id behind a checkpointed Dataset — lets the round
-    * loop free exactly the checkpoints it created (a blanket registry
-    * diff would unpersist concurrent jobs' caches on a shared session). */
-  private def checkpointRddId(df: DataFrame): Option[Int] =
-    df.queryExecution.analyzed.collectFirst {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.id
-    }
 
   /** `rounds` full hub↔authority iterations over the directed `edges`.
     * Returns (node, authority, hub) in float units, rounded to 6. */
   def hits(edges: DataFrame, srcCol: String, dstCol: String,
-           rounds: Int): DataFrame = {
+           rounds: Int): DataFrame = Materialize.scoped { s =>
     require(rounds >= 1 && rounds <= 20, s"rounds=$rounds")
     val one = 1048576L
-    val sc = edges.sparkSession.sparkContext
     val e0 = edges.select(col(srcCol).cast("long").as("src"),
         col(dstCol).cast("long").as("dst"))
       .distinct()
-    val eBySrc = e0.repartition(col("src")).persist()
+    val eBySrc = s.persist(e0.repartition(col("src")))
     // derived from the PERSISTED src copy, not from e0: the two copies
     // materialize in separate jobs (round 1's authority half, then its hub
     // half), and a second lineage from e0 re-runs the scan + distinct of
     // the whole edge relation instead of re-reading the cached copy
-    val eByDst = eBySrc.repartition(col("dst")).persist()
-    val nodes = eBySrc.select(col("src").as("node"))
-      .union(eBySrc.select(col("dst").as("node"))).distinct().persist()
+    val eByDst = s.persist(eBySrc.repartition(col("dst")))
+    val nodes = s.persist(eBySrc.select(col("src").as("node"))
+      .union(eBySrc.select(col("dst").as("node"))).distinct())
     // divide by the round's max — over the rows PRESENT, which is the max
     // over all nodes too (absent rows are zeros, and raw sums of positive
     // h/a are positive for at least one node on any nonempty edge set)
@@ -80,21 +74,17 @@ object Hits {
     }
     var h = nodes.select(col("node"), lit(one).as("h"))
     var a: DataFrame = h // placeholder; rounds >= 1 always overwrites
-    var prevIds: Seq[Int] = Nil
     for (_ <- 1 to rounds) {
-      a = normalize(
+      val prev = Seq(a, h)
+      a = s.checkpoint(normalize(
         eBySrc.join(h.withColumnRenamed("node", "src"), "src")
-          .groupBy(col("dst").as("node")).agg(sum("h").as("a")), "a")
-        .localCheckpoint()
-      h = normalize(
+          .groupBy(col("dst").as("node")).agg(sum("h").as("a")), "a"))
+      h = s.checkpoint(normalize(
         eByDst.join(a.withColumnRenamed("node", "dst"), "dst")
-          .groupBy(col("src").as("node")).agg(sum("a").as("h")), "h")
-        .localCheckpoint()
+          .groupBy(col("src").as("node")).agg(sum("a").as("h")), "h"))
       // both halves of this round are materialized — the previous
       // round's checkpoints are unreferenced from here on
-      val persisted = sc.getPersistentRDDs
-      prevIds.foreach(id => persisted.get(id).foreach(_.unpersist(false)))
-      prevIds = (checkpointRddId(a) ++ checkpointRddId(h)).toSeq
+      s.release(prev: _*)
     }
     nodes.join(a, Seq("node"), "left").join(h, Seq("node"), "left")
       .select(col("node"),

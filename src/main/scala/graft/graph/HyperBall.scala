@@ -3,6 +3,8 @@ package graft.graph
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.util.Materialize
+
 /** HyperBall (Boldi–Vigna 2013) — the neighborhood function at graph
   * scale: per node, the (approximate) number of nodes within ≤ r hops,
   * for every radius r up to a bound. The classic inputs to effective-
@@ -43,14 +45,13 @@ object HyperBall {
     * Returns (node, r, msz, ball_est): `msz` the sketch occupancy,
     * `ball_est` exact when msz < k, the KMV estimate otherwise. */
   def neighborhood(edges: DataFrame, srcCol: String, dstCol: String,
-                   rounds: Int, k: Int): DataFrame = {
+                   rounds: Int, k: Int): DataFrame = Materialize.scoped { s =>
     require(rounds >= 1 && rounds <= 20, s"rounds=$rounds")
     require(k >= 2, s"k=$k")
-    val e = edges.select(col(srcCol).cast("long").as("src"),
+    val e = s.persist(edges.select(col(srcCol).cast("long").as("src"),
         col(dstCol).cast("long").as("dst"))
       .where(col("src").isNotNull && col("dst").isNotNull)
-      .repartition(col("src"))
-      .persist()
+      .repartition(col("src")))
     // node-id hash: affine + one quadratic mixing round mod M (the
     // Projection.signComponent discipline — an affine map alone of
     // consecutive ids is a Weyl sequence, not KMV-uniform)
@@ -66,9 +67,9 @@ object HyperBall {
     // state: one row per node carrying the SORTED bottom-k hash array —
     // estimates are projections of it (no per-round estimate aggregate),
     // and the next round explodes it back to (node, hash) contributions
-    var sketch = nodes.select(col("node"), array(ih).as("arr")).persist()
-    val est = (r: Int, s: DataFrame) =>
-      s.select(col("node"), lit(r).as("r"),
+    var sketch = s.persist(nodes.select(col("node"), array(ih).as("arr")))
+    val est = (r: Int, sk: DataFrame) =>
+      sk.select(col("node"), lit(r).as("r"),
         size(col("arr")).cast("long").as("msz"),
         when(size(col("arr")) < k, size(col("arr")).cast("long"))
           .otherwise(expr(s"${(k - 1).toLong * M} div element_at(arr, -1)"))
@@ -94,19 +95,14 @@ object HyperBall {
       // plans/r13/p71_salted_rejected.txt and OPTIMIZATION_r13.md).
       // The shuffle_hash hint keeps the persisted edge relation from
       // being re-sorted every round (sort-merge default).
-      val next = e.join(
+      // checkpointed, not freed: round r+1 reads sketch_r twice (edge join
+      // + self union) and the returned union of estimates reads every round
+      sketch = s.checkpoint(e.join(
           sketch.withColumnRenamed("node", "src").hint("shuffle_hash"), "src")
         .select(col("dst").as("node"), explode(col("arr")).as("ih"))
         .unionByName(sketch.select(col("node"), explode(col("arr")).as("ih")))
         .groupBy("node")
-        .agg(call_function("bottom_k_distinct", col("ih"), lit(k)).as("arr"))
-        // localCheckpoint, not persist: round r+1 references sketch_r
-        // twice (edge join + self union) and every round's estimate row
-        // references its sketch again — un-truncated, the analyzed plan
-        // (stringified per AQE event) grows ~2^rounds (the p49 lesson,
-        // milder exponent)
-        .localCheckpoint()
-      sketch = next
+        .agg(call_function("bottom_k_distinct", col("ih"), lit(k)).as("arr")))
       out = out.unionByName(est(r, sketch))
     }
     out

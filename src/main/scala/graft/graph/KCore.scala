@@ -3,6 +3,8 @@ package graft.graph
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.util.Materialize
+
 /** Parallel k-core peeling — the degeneracy-based density filter
   * (Seidman 1983; the standard "throw away the sparse fringe" step
   * before community detection or spam-cluster analysis on a web or
@@ -25,8 +27,10 @@ import org.apache.spark.sql.functions._
   * once and cached; per round, one join of edges against the alive
   * set on `src`, one semi-join on `dst`, and one map-side-combined
   * count — only node lists ever move, and a hub's edges collapse to
-  * its count before the exchange. Per-round persists keep the
-  * unrolled plan linear in rounds (the alive set feeds both joins).
+  * its count before the exchange. Each round's alive set is
+  * checkpointed and the previous one freed ([[graft.util.Materialize]]),
+  * which keeps the unrolled plan linear in rounds (the alive set feeds
+  * both joins).
   *
   * Determinism: pure integer set recurrence — partitioning- and
   * order-independent.
@@ -40,7 +44,7 @@ object KCore {
     * alive set — the quantity the final peel tested (≥ k by
     * construction). */
   def prune(edges: DataFrame, srcCol: String, dstCol: String,
-            k: Int, rounds: Int): DataFrame = {
+            k: Int, rounds: Int): DataFrame = Materialize.scoped { s =>
     require(k >= 1, s"k=$k")
     require(rounds >= 1 && rounds <= 50, s"rounds=$rounds")
     val canon = edges.select(
@@ -48,15 +52,14 @@ object KCore {
         greatest(col(srcCol), col(dstCol)).cast("long").as("v"))
       .where(col("u") =!= col("v") && col("u").isNotNull && col("v").isNotNull)
       .distinct()
-    val sym = canon
+    val sym = s.persist(canon
       .unionByName(canon.select(col("v").as("u"), col("u").as("v")))
       .select(col("u").as("src"), col("v").as("dst"))
-      .repartition(col("src"))
-      .persist()
+      .repartition(col("src")))
 
-    var alive = sym.select(col("src").as("node")).distinct()
-      .withColumn("deg", lit(-1L)).persist()
-    for (_ <- 1 to rounds) {
+    val alive0 = s.persist(sym.select(col("src").as("node")).distinct()
+      .withColumn("deg", lit(-1L)))
+    s.iterate(alive0, rounds) { (alive, _) =>
       // count alive in-neighbors per DST endpoint: the symmetric relation
       // makes in-neighbors = neighbors, so one map-side-combined count
       // keyed by dst replaces the former dst-keyed LEFT SEMI of raw edge
@@ -68,15 +71,10 @@ object KCore {
         .join(alive.select(col("node").as("src")), "src")
         .groupBy(col("dst")).agg(count(lit(1)).as("deg"))
         .where(col("deg") >= k)
-      // localCheckpoint, not persist: alive_r is referenced TWICE by
-      // round r+1 (the src filter and the alive re-check), so an
-      // un-truncated analyzed plan doubles per round and its
-      // stringification (emitted per AQE event) goes exponential — the
-      // p49 lesson
-      alive = cnt.join(alive.select(col("node").as("dst")), "dst")
+      // alive_r is read twice by round r+1 (the src filter and the
+      // alive re-check) — iterate checkpoints it
+      cnt.join(alive.select(col("node").as("dst")), "dst")
         .select(col("dst").as("node"), col("deg"))
-        .localCheckpoint()
     }
-    alive
   }
 }

@@ -3,6 +3,8 @@ package graft.graph
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.util.Materialize
+
 /** Synchronous label propagation — community detection over the same
   * edge relations [[PageRank]] ranks: nodes repeatedly adopt the most
   * frequent label among their neighbors (plus their own current label,
@@ -32,10 +34,11 @@ import org.apache.spark.sql.functions._
   * map-side-combined vote aggregation, and the group-limited argmax
   * window. Only (node, label) pairs ever move; a hub's votes collapse
   * map-side before the exchange, and the argmax state is one row per
-  * (node, partition) — skew-safe. Per-round label checkpoints keep the
-  * plan LINEAR in rounds — each round's labels feed two consumers (the
-  * neighbor join and the self-vote), which otherwise doubles the lineage
-  * every round — and they hold node-bounded relations only.
+  * (node, partition) — skew-safe. Per-round label checkpoints
+  * ([[graft.util.Materialize.Scope.iterate]]) keep the plan LINEAR in
+  * rounds — each round's labels feed two consumers (the neighbor join and
+  * the self-vote), which otherwise doubles the lineage every round — and
+  * they hold node-bounded relations only.
   */
 object LabelPropagation {
 
@@ -44,49 +47,41 @@ object LabelPropagation {
     * semantics). Returns (node: long, label: long); initial label =
     * node id. */
   def run(edges: DataFrame, srcCol: String, dstCol: String,
-          rounds: Int): DataFrame = {
+          rounds: Int): DataFrame = Materialize.scoped { s =>
     require(rounds >= 1 && rounds <= 50, s"rounds=$rounds")
-    val e = edges.select(col(srcCol).cast("long").as("src"),
+    val e = s.persist(edges.select(col(srcCol).cast("long").as("src"),
         col(dstCol).cast("long").as("dst"))
-      .repartition(col("src")).persist()
-    val nodes = e.select(col("src").as("node"))
+      .repartition(col("src")))
+    val nodes = s.persist(e.select(col("src").as("node"))
       .unionByName(e.select(col("dst").as("node")))
-      .distinct().repartition(col("node")).persist()
+      .distinct().repartition(col("node")))
 
     import org.apache.spark.sql.expressions.Window
-    var labels = nodes.select(col("node"), col("node").as("label"))
-    for (_ <- 1 to rounds) {
-      val votes = e.join(labels.withColumnRenamed("node", "src"), "src")
-        .select(col("dst").as("node"), col("label"))
-        .unionByName(labels) // self-vote
-        .groupBy("node", "label").agg(count(lit(1)).as("c"))
-      // argmax (highest count, smallest label) as ONE row_number window —
-      // round 13: the former max-count + equi-join + min-label spelling
-      // cost three aggregations and a (node, c) join, five exchanges per
-      // round, and needed `votes` persisted (two consumers). (node, label)
-      // rows are unique out of the aggregate, so the (c desc, label asc)
-      // order is total within a node: row_number = 1 IS the argmax,
-      // deterministically. The rn = 1 filter plans a partial
-      // WindowGroupLimit (SPARK-37099) that cuts each map partition to one
-      // row per node BEFORE the exchange — the window shuffle ships ≤ one
-      // row per (node, input partition), never the vote relation. Two
-      // exchanges per round, votes consumed once, no persist.
-      // localCheckpoint, NOT persist: labels_r is referenced twice by
-      // round r+1 (neighbor join + self-vote), so an un-truncated logical
-      // plan grows ~2^rounds. Execution is fine either way (the cache
-      // dedups work), but Spark stringifies the ANALYZED plan for every
-      // AQE event — measured 120+ s of pure driver generateTreeString at
-      // 4 rounds, data-size-independent. Truncating the lineage to a
-      // LogicalRDD leaf per round keeps the plan (and its string)
-      // constant-size. (p46 PageRank doesn't need this: its rank relation
-      // is referenced once per round — linear.)
-      val w = Window.partitionBy("node")
-        .orderBy(col("c").desc, col("label").asc)
-      labels = votes.withColumn("rn", row_number().over(w))
-        .where(col("rn") === 1)
-        .select(col("node"), col("label"))
-        .localCheckpoint()
+    s.iterate(nodes.select(col("node"), col("node").as("label")), rounds) {
+      (labels, _) =>
+        val votes = e.join(labels.withColumnRenamed("node", "src"), "src")
+          .select(col("dst").as("node"), col("label"))
+          .unionByName(labels) // self-vote
+          .groupBy("node", "label").agg(count(lit(1)).as("c"))
+        // argmax (highest count, smallest label) as ONE row_number window —
+        // round 13: the former max-count + equi-join + min-label spelling
+        // cost three aggregations and a (node, c) join, five exchanges per
+        // round, and needed `votes` persisted (two consumers). (node, label)
+        // rows are unique out of the aggregate, so the (c desc, label asc)
+        // order is total within a node: row_number = 1 IS the argmax,
+        // deterministically. The rn = 1 filter plans a partial
+        // WindowGroupLimit (SPARK-37099) that cuts each map partition to one
+        // row per node BEFORE the exchange — the window shuffle ships ≤ one
+        // row per (node, input partition), never the vote relation. Two
+        // exchanges per round, votes consumed once, no persist.
+        // labels_r is read twice by round r+1 (neighbor join + self-vote);
+        // iterate checkpoints it. (p46 PageRank needs no checkpoint: its
+        // rank relation is read once per round — linear.)
+        val w = Window.partitionBy("node")
+          .orderBy(col("c").desc, col("label").asc)
+        votes.withColumn("rn", row_number().over(w))
+          .where(col("rn") === 1)
+          .select(col("node"), col("label"))
     }
-    labels
   }
 }

@@ -3,6 +3,8 @@ package graft.pipeline
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.util.Materialize
+
 /** Distributed BPE-merge tokenizer induction (Sennrich et al. 2016,
   * arXiv:1508.07909) — the iterative pair-merging that [[TextAnalysis.vocabTopK]]'s
   * whole-word ranking is not: each round finds the globally most frequent
@@ -20,8 +22,10 @@ import org.apache.spark.sql.functions._
   *    sequential training would pick verbatim, so a 32k-merge vocabulary
   *    runs in ~hundreds of rounds, not 32k driver-synchronized jobs,
   *    while staying bit-identical to one-merge-at-a-time training;
-  *  - `localCheckpoint` after each round keeps the plan flat instead of
-  *    stacking `numMerges` UDF layers of lineage.
+  *  - a checkpoint after each round ([[graft.util.Materialize]]) keeps
+  *    the plan flat instead of stacking `numMerges` UDF layers of
+  *    lineage; a round's state is freed once the next round's job has
+  *    materialised its successor.
   *
   * The re-tokenize itself is a row-local Scala UDF — acceptable off the
   * hot path because it runs over the histogram, never the corpus.
@@ -55,14 +59,6 @@ object Bpe {
     df.select(explode(filter(split(col(textCol), " "),
         x => x =!= "" && !x.contains(Sep))).as("word"))
       .groupBy("word").agg(count(lit(1)).as("cnt"))
-
-  /** The persisted-RDD id behind a checkpointed Dataset (its analyzed
-    * plan is a single LogicalRDD) — lets [[train]] free exactly the
-    * checkpoints it created, never a concurrent job's. */
-  private def checkpointRddId(df: DataFrame): Option[Int] =
-    df.queryExecution.analyzed.collectFirst {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.id
-    }
 
   /** BATCHED merge selection with an EXACT-equivalence guarantee: from
     * the round's top-`batchK` pairs (sorted (freq desc, pair-string asc),
@@ -139,42 +135,6 @@ object Bpe {
     acc.result()
   }
 
-  /** The LOOSER standard batched-BPE selection, for [[trainFast]]: walk
-    * the ranked list greedily taking every pair that is symbol-disjoint
-    * from the accepted set (SKIPPING conflicts instead of stopping),
-    * still excluding self-pairs and aliases beyond the stop point so the
-    * one-scan application stays valid, and only while a pair's count
-    * stays within HALF the round head's — the standard halving guard: a
-    * pair below f0/2 can be overtaken by pairs the earlier merges create
-    * or re-rank, so it is cheaper to re-rank it next round than to spend
-    * merge budget on it out of order. Much larger batches than
-    * [[selectBatch]] — and NOT sequential-exact: a skipped conflicting
-    * pair may have outranked a later accepted one after recounting.
-    * The trade is the standard one production tokenizers make. */
-  private[pipeline] def selectBatchFast(cands: Seq[(String, String, Long)],
-                                        priorSymbols: Set[String]): Seq[(String, String, Long)] = {
-    val floor = cands.head._3 / 2
-    val acc = Seq.newBuilder[(String, String, Long)]
-    val accSyms = scala.collection.mutable.Set[String]()
-    val accNew = scala.collection.mutable.Set[String]()
-    var stop = false
-    var i = 0
-    while (!stop && i < cands.length) {
-      val (l, r, f) = cands(i)
-      if (i > 0 && f < floor) stop = true
-      else if (!accSyms(l) && !accSyms(r) && !accNew(l) && !accNew(r)) {
-        acc += ((l, r, f))
-        // the same application-validity stops as selectBatch: a self-pair
-        // or an aliased output inside the batch breaks the disjoint
-        // one-scan argument for LATER accepts
-        if (l == r || priorSymbols(l + r) || accNew(l + r)) stop = true
-        accSyms += l; accSyms += r; accNew += (l + r)
-      }
-      i += 1
-    }
-    acc.result()
-  }
-
   /** Up to `numMerges` global argmax-pair merges over the histogram,
     * batched per round by [[selectBatch]] (exact — see its proof notes).
     * Ties on frequency resolve to the lexicographically smallest
@@ -186,49 +146,22 @@ object Bpe {
   def train(words: DataFrame, numMerges: Int): Seq[Merge] =
     trainRounds(words, numMerges)._1
 
-  /** PRODUCTION-scale batched training — the explicit opt-out from
-    * [[train]]'s bit-exact-sequential guarantee: per round the top-`batchK`
-    * pairs are taken greedily wherever symbol-disjoint
-    * ([[selectBatchFast]] — conflicts are skipped, not batch-ending), so
-    * a 32k-merge vocabulary needs on the order of `32k / batchK` rounds.
-    * The merge LIST may deviate from sequential training where skipped
-    * conflicts would have outranked later picks after recounting — the
-    * standard batched-BPE trade; each accepted batch still applies in one
-    * scan with unchanged greedy semantics. Use [[train]] when
-    * reproducibility against a sequential reference matters (it is the
-    * catalog/oracle default); `BpeSpec` pins trainFast's round count and
-    * its merge-set overlap with sequential on realistic text. */
-  def trainFast(words: DataFrame, numMerges: Int,
-                batchK: Int = 256): (Seq[Merge], Int) =
-    trainLoop(words, numMerges, batchK,
-      (cands, _, prior) => selectBatchFast(cands, prior))
-
   /** [[train]] plus the number of Spark rounds it ran — exposed for the
     * batching-effectiveness assertion in `BpeSpec`. */
   private[pipeline] def trainRounds(words: DataFrame, numMerges: Int,
-                                    batchK: Int = 64): (Seq[Merge], Int) =
-    trainLoop(words, numMerges, batchK,
-      (cands, truncated, prior) => selectBatch(cands, truncated, prior))
-
-  private def trainLoop(words: DataFrame, numMerges: Int, batchK: Int,
-                        selector: (Seq[(String, String, Long)], Boolean,
-                          Set[String]) => Seq[(String, String, Long)])
-      : (Seq[Merge], Int) = {
+                                    batchK: Int = 64): (Seq[Merge], Int) = Materialize.scoped { s =>
     require(numMerges > 0, "need at least one merge round")
     require(batchK >= 1, s"batchK=$batchK")
-    val sc = words.sparkSession.sparkContext
-    val ownCheckpoints = Seq.newBuilder[Int]
     // (?s) so line terminators survive as symbols — a bare `.` silently
     // DROPS them, leaving symbols that no longer concatenate back to the
     // word (and diverging from the oracle's character slicing). Java
     // regex `.` consumes one CODE POINT, matching DuckDB's code-point
     // slicing and [[codePoints]] in encodeWords.
-    var st = words
+    var st = s.checkpoint(words
       .select(regexp_extract_all(col("word"), lit("(?s)."), lit(0)).as("syms"),
         col("cnt"))
-      .where(size(col("syms")) > 0)
-      .localCheckpoint()
-    ownCheckpoints ++= checkpointRddId(st)
+      .where(size(col("syms")) > 0))
+    var prev: Option[DataFrame] = None
     val merges = Seq.newBuilder[Merge]
     // all merge outputs so far: selectBatch's alias rule needs to know
     // every multi-code-point symbol that can exist in the state (original
@@ -238,7 +171,7 @@ object Bpe {
     var done = 0
     var rounds = 0
     var exhausted = false
-    try while (done < numMerges && !exhausted) {
+    while (done < numMerges && !exhausted) {
       val n = size(col("syms"))
       val top = st
         .select(explode(zip_with(
@@ -248,11 +181,13 @@ object Bpe {
         .agg(sum(col("cnt")).as("freq"))
         .orderBy(col("freq").desc, concat(col("l"), lit(Sep), col("r")).asc)
         .limit(batchK).collect()
+      // that job materialised `st`; the state before it is unreferenced
+      prev.foreach(s.release(_))
       if (top.isEmpty) exhausted = true
       else {
         val cands = top.toSeq.map(r =>
           (r.getString(0), r.getString(1), r.getLong(2)))
-        val accepted = selector(cands, cands.length == batchK,
+        val accepted = selectBatch(cands, cands.length == batchK,
             createdSymbols.toSet)
           .take(numMerges - done)
         accepted.foreach { case (l, r, f) =>
@@ -282,22 +217,11 @@ object Bpe {
         // lazy checkpoint: materializes inside the NEXT round's argmax job
         // instead of costing a separate job per round (2x fewer jobs —
         // round overhead dominates when the histogram is small)
-        st = st.withColumn("syms", mergeUdf(col("syms"))).localCheckpoint(false)
-        ownCheckpoints ++= checkpointRddId(st)
+        prev = Some(st)
+        st = s.checkpoint(st.withColumn("syms", mergeUdf(col("syms"))),
+          eager = false)
         rounds += 1
       }
-    }
-    // free exactly the checkpoints THIS call created (tracked by RDD id
-    // — a blanket registry diff would unpersist concurrent jobs' caches
-    // on a shared session, and unpersisting someone else's localCheckpoint
-    // is unrecoverable): otherwise numMerges materialized copies of the
-    // histogram sit in the block manager for the rest of the session (at
-    // the operator's own claimed scale, the histogram of a 100 TB corpus
-    // is billions of rows). In a finally so a mid-round failure can't
-    // leak them either.
-    finally {
-      val persisted = sc.getPersistentRDDs
-      ownCheckpoints.result().foreach(id => persisted.get(id).foreach(_.unpersist(false)))
     }
     (merges.result(), rounds)
   }
@@ -379,25 +303,24 @@ object Bpe {
     * one document's token ids (the bounded-document contract every
     * per-doc text operator here shares). */
   def tokenizeDocs(df: DataFrame, idCol: String, textCol: String,
-                   numMerges: Int): DataFrame = {
+                   numMerges: Int): DataFrame = Materialize.scoped { s =>
     val spark = df.sparkSession
-    val hist = wordHistogram(df, textCol).localCheckpoint()
+    val hist = s.checkpoint(wordHistogram(df, textCol))
     val merges = train(hist, numMerges)
     val ms = merges.sortBy(_.rank).map(m => (m.left, m.right)).toArray
     val applyUdf = udf((word: String) => applyMergesToWord(ms, word))
     // word → symbol sequence over the histogram; persisted: read once to
-    // collect the vocab and once by the corpus join (the operator's
-    // working set, the [[tokenizedVocab]] convention)
-    val wordToks = hist.where(length(col("word")) > 0)
-      .select(col("word"), applyUdf(col("word")).as("toks"))
-      .persist()
+    // collect the vocab and once by the corpus join (the result reads it,
+    // so it stays cached — the [[tokenizedVocab]] convention)
+    val wordToks = s.persist(hist.where(length(col("word")) > 0)
+      .select(col("word"), applyUdf(col("word")).as("toks")))
     val md = java.security.MessageDigest.getInstance("MD5")
-    def md5hex(s: String): String =
-      md.digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
+    def md5hex(sym: String): String =
+      md.digest(sym.getBytes("UTF-8")).map("%02x".format(_)).mkString
     val vmap = wordToks.select(explode(col("toks")).as("sym")).distinct()
       .collect().map(_.getString(0))
-      .map(s => s -> md5hex(s)).sortBy(_._2)
-      .zipWithIndex.map { case ((s, _), i) => s -> (i + 1) }.toMap
+      .map(sym => sym -> md5hex(sym)).sortBy(_._2)
+      .zipWithIndex.map { case ((sym, _), i) => sym -> (i + 1) }.toMap
     val bc = spark.sparkContext.broadcast(vmap)
     val idsUdf = udf((toks: Seq[String]) => toks.map(bc.value))
     val wordIds = wordToks.select(col("word"), idsUdf(col("toks")).as("ids"))
@@ -418,15 +341,14 @@ object Bpe {
 
   /** Train + encode over `df(textCol)`: the p33 catalog shape. The
     * histogram is checkpointed once and shared by both passes (the
-    * corpus shuffles exactly once). That one histogram copy stays in
-    * the block manager until the caller drops caches — the returned
-    * DataFrame reads it lazily, so it cannot be freed here; it is the
-    * operator's working set, not a leak (train's per-round copies ARE
-    * freed internally). */
-  def tokenizedVocab(df: DataFrame, textCol: String, numMerges: Int): DataFrame = {
-    val hist = wordHistogram(df, textCol).localCheckpoint()
-    encodeWords(hist, train(hist, numMerges))
-  }
+    * corpus shuffles exactly once). The returned DataFrame reads that
+    * histogram copy lazily, so it stays cached until the caller drops
+    * caches (train's per-round copies are freed on return). */
+  def tokenizedVocab(df: DataFrame, textCol: String, numMerges: Int): DataFrame =
+    Materialize.scoped { s =>
+      val hist = s.checkpoint(wordHistogram(df, textCol))
+      encodeWords(hist, train(hist, numMerges))
+    }
 
   /** The DuckDB oracle for [[mergeTable]]: the training loop UNROLLED into
     * one CTE chain per round (state sR → pair counts pR → argmax bR →

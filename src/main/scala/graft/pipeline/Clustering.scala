@@ -3,6 +3,8 @@ package graft.pipeline
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.util.Materialize
+
 /** Distributed Lloyd k-means over an embedding column — the full-corpus
   * clustering operator (corpus mixture analysis, cluster-balanced
   * sampling) that the IVF quantizer's bounded-sample training
@@ -42,7 +44,7 @@ object Clustering {
     * `ORDER BY dist ASC, cl ASC`. Empty clusters keep their previous
     * centroid. */
   def kmeans(df: DataFrame, idCol: String, vecCol: String,
-             k: Int, iters: Int): DataFrame = {
+             k: Int, iters: Int): DataFrame = Materialize.scoped { s =>
     require(k > 0 && iters >= 0)
     // one cheap aggregate up front, BEFORE seeds and BEFORE the
     // repartition (the guard over the raw scan is a scan + 1-row
@@ -72,12 +74,11 @@ object Clustering {
     // final assignment otherwise re-scan AND re-shuffle the corpus once
     // per round (iters+1 passes measured) — one exchange into the storage
     // tier (spills to disk when the corpus outgrows memory) replaces them
-    // all. Freed below once the final assignment materializes — the
-    // Multimodal convention — so a long-lived session calling this
-    // repeatedly doesn't accumulate storage blocks.
-    val base = df.select(col(idCol), col(vecCol))
-      .repartition(df.sparkSession.sparkContext.defaultParallelism)
-      .persist()
+    // all. Freed on return, once the final assignment is checkpointed, so
+    // a long-lived session calling this repeatedly doesn't accumulate
+    // storage blocks.
+    val base = s.persist(df.select(col(idCol), col(vecCol))
+      .repartition(df.sparkSession.sparkContext.defaultParallelism))
 
     for (_ <- 1 to iters) {
       val cl = cents
@@ -106,11 +107,8 @@ object Clustering {
     }
     val fin = cents
     val finalAssign = udf((v: Seq[Float]) => argminL2(fin, v))
-    val out = base
-      .select(col(idCol).as("vec_id"), finalAssign(col(vecCol)).as("cluster"))
-      .localCheckpoint(true)
-    base.unpersist()
-    out
+    s.checkpoint(base
+      .select(col(idCol).as("vec_id"), finalAssign(col(vecCol)).as("cluster")))
   }
 
   /** DuckDB oracle for [[kmeans]] over the `embeddings` table: seeds +

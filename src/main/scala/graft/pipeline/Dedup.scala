@@ -91,12 +91,6 @@ object Dedup {
           transform(sequence(lit(0), size(words) - n),
             i => concat_ws(" ", (0 until n).map(j => element_at(words, i + j + 1)): _*))))
 
-  /** Distinct word n-grams of a text column as an array column. Only safe
-    * for one-shot/narrow use — hot paths should materialize the words array
-    * first (see ngramsOfWords). */
-  def wordNgrams(text: Column, n: Int): Column =
-    ngramsOfWords(filter(split(text, " "), w => w =!= ""), n)
-
   /** Jaccard similarity of two (already distinct) arrays. */
   def jaccard(a: Column, b: Column): Column = {
     val inter = size(array_intersect(a, b)).cast("double")

@@ -3,6 +3,8 @@ package graft.pipeline
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.util.Materialize
+
 /** Event-log product analytics — the cohort/funnel pair every
   * OLAP-on-events engine ships. Both are count-shaped (exact integers,
   * no float folds), so the oracle matches bit-for-bit, and both follow
@@ -177,20 +179,21 @@ object EventAnalytics {
     import spark.implicits._
     val e = events.select(col(userCol).as("user_id"),
       col(tsCol).as("ts"), col(typeCol).as("et"))
-    var cur = e.where(col("et") === steps.head)
-      .groupBy("user_id").agg(min("ts").as("t")).persist()
-    val counts = Seq.newBuilder[(Int, String, Long)]
-    counts += ((1, steps.head, cur.count()))
-    steps.zipWithIndex.drop(1).foreach { case (s, i) =>
-      val prev = cur
-      cur = e.where(col("et") === s)
-        .join(prev.select(col("user_id"), col("t").as("prev_t")), "user_id")
-        .where(col("ts") > col("prev_t"))
-        .groupBy("user_id").agg(min("ts").as("t")).persist()
-      counts += ((i + 1, s, cur.count())) // materializes cur off prev's cache
-      prev.unpersist(false)
-    }
-    cur.unpersist(false)
-    counts.result().toDF("step_idx", "step", "n_users")
+    Materialize.scoped { s =>
+      var cur = s.persist(e.where(col("et") === steps.head)
+        .groupBy("user_id").agg(min("ts").as("t")))
+      val counts = Seq.newBuilder[(Int, String, Long)]
+      counts += ((1, steps.head, cur.count()))
+      steps.zipWithIndex.drop(1).foreach { case (step, i) =>
+        val prev = cur
+        cur = s.persist(e.where(col("et") === step)
+          .join(prev.select(col("user_id"), col("t").as("prev_t")), "user_id")
+          .where(col("ts") > col("prev_t"))
+          .groupBy("user_id").agg(min("ts").as("t")))
+        counts += ((i + 1, step, cur.count())) // materializes cur off prev's cache
+        s.release(prev)
+      }
+      counts.result()
+    }.toDF("step_idx", "step", "n_users")
   }
 }

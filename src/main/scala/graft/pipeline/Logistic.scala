@@ -3,6 +3,8 @@ package graft.pipeline
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.util.Materialize
+
 /** Fixed-point logistic-regression quality classifier — the TRAINED
   * member of the fastText-style linear-filter family next to the
   * closed-form [[NaiveBayes]]: hashed bag-of-words features, full-batch
@@ -92,22 +94,18 @@ object Logistic {
     * sigmoid in S units, `pred` the thresholded class. */
   def trainPredict(df: DataFrame, idCol: String, textCol: String,
                    labelCol: String, nBuckets: Int = 8, rounds: Int = 3,
-                   lrMul: Long = 16L): DataFrame = {
+                   lrMul: Long = 16L): DataFrame = Materialize.scoped { s =>
     require(nBuckets >= 1 && rounds >= 1 && lrMul >= 1,
       s"nBuckets=$nBuckets rounds=$rounds lrMul=$lrMul")
     // one tokenize+hash pass, persisted: every round reads (y, x) only;
-    // freed after the eager materialization of the result
-    val f = featurize(df, idCol, textCol, labelCol, nBuckets).persist()
-    val n = f.count()
-    val w = gdLoop(f, nBuckets + 1, rounds, lrMul * n)
-    val out = f.select(col("doc_id"), col("y").cast("int").as("y"),
+    // freed on return, after the eager checkpoint of the result
+    val f = s.persist(featurize(df, idCol, textCol, labelCol, nBuckets))
+    val w = gdLoop(f, nBuckets + 1, rounds, lrMul * f.count())
+    s.checkpoint(f.select(col("doc_id"), col("y").cast("int").as("y"),
         hardSigmoid(dotUdf(w)(col("x"))).as("score_fp"))
       .select(col("doc_id"), col("y"), col("score_fp"),
         when(col("score_fp") * 2 >= Scale, 1).otherwise(0).as("pred"))
-      .withColumn("correct", col("pred") === col("y"))
-      .localCheckpoint(true)
-    f.unpersist()
-    out
+      .withColumn("correct", col("pred") === col("y")))
   }
 
   /** The final trained weights alone — exposed for the scalar-parity
@@ -115,11 +113,9 @@ object Logistic {
   private[graft] def trainWeights(df: DataFrame, idCol: String,
                                   textCol: String, labelCol: String,
                                   nBuckets: Int, rounds: Int,
-                                  lrMul: Long): Array[Long] = {
-    val f = featurize(df, idCol, textCol, labelCol, nBuckets).persist()
-    val n = f.count()
-    val w = gdLoop(f, nBuckets + 1, rounds, lrMul * n)
-    f.unpersist()
-    w
-  }
+                                  lrMul: Long): Array[Long] =
+    Materialize.scoped { s =>
+      val f = s.persist(featurize(df, idCol, textCol, labelCol, nBuckets))
+      gdLoop(f, nBuckets + 1, rounds, lrMul * f.count())
+    }
 }

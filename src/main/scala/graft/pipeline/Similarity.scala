@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
+import graft.util.Materialize
+
 /** Approximate-nearest-neighbor search over an embedding column
   * (Array[Float]). Brute-force cosine top-k as the exact baseline; a
   * random-hyperplane LSH-bucketed variant as the scale path.
@@ -399,8 +401,9 @@ object Similarity {
     * the ANN path); everything after runs on bounded relations —
     * candidates are |Q|·candK rows, pairwise sims |Q|·candK², and each
     * of the k greedy rounds is a join + one argmax hash-aggregate over
-    * those. No collect anywhere; per-round localCheckpoints keep the
-    * k-round plan flat (the [[graft.pipeline.Bpe]] convention).
+    * those. No collect anywhere; per-round checkpoints
+    * ([[graft.util.Materialize.Scope.iterate]]) keep the k-round plan
+    * flat.
     *
     * Determinism: every pairwise sim is rounded to 6 decimals (the p5
     * parity contract), and the MMR score is a fixed expression over
@@ -413,44 +416,42 @@ object Similarity {
     */
   def mmrTopK(corpus: DataFrame, queries: DataFrame, idCol: String,
               vecCol: String, candK: Int, k: Int,
-              lambda: Double = 0.7): DataFrame = {
+              lambda: Double = 0.7): DataFrame = Materialize.scoped { s =>
     require(k >= 1 && candK >= k, s"candK=$candK k=$k")
     require(lambda >= 0.0 && lambda <= 1.0, s"lambda=$lambda")
     graft.functions.CosineSim.register(corpus.sparkSession)
     val lam = lit(lambda)
     val oneMinusLam = lit(1.0) - lit(lambda)
-    val cand = bruteForceTopK(corpus, queries, idCol, vecCol, candK)
+    val cand = s.checkpoint(bruteForceTopK(corpus, queries, idCol, vecCol, candK)
       .select(col("query_id"), col("neighbor_id").as("doc_id"),
-        col("sim").as("rel"))
-      .localCheckpoint()
+        col("sim").as("rel")))
     val vecs = corpus.select(col(idCol).as("doc_id"), col(vecCol).as("v"))
     val cv = cand.join(vecs, "doc_id")
       .select(col("query_id"), col("doc_id"), col("v"))
-    val pair = cv.select(col("query_id"), col("doc_id").as("a_id"), col("v").as("va"))
+    val pair = s.checkpoint(cv
+      .select(col("query_id"), col("doc_id").as("a_id"), col("v").as("va"))
       .join(cv.select(col("query_id"), col("doc_id").as("b_id"), col("v").as("vb")),
         "query_id")
       .where(col("a_id") =!= col("b_id"))
       .select(col("query_id"), col("a_id"), col("b_id"),
-        round(cosine(col("va"), col("vb")), 6).as("dsim"))
-      .localCheckpoint()
+        round(cosine(col("va"), col("vb")), 6).as("dsim")))
     val wPick = Window.partitionBy("query_id")
       .orderBy(col("mmr_raw").desc, col("doc_id"))
     // round 1: empty selected set, the redundancy term is zero — same
     // formula, maxsim = 0
-    var selected = cand
+    val first = s.checkpoint(cand
       .withColumn("mmr_raw", lam * col("rel") - oneMinusLam * lit(0.0))
       .withColumn("rn", row_number().over(wPick)).where(col("rn") === 1)
       .select(col("query_id"), col("doc_id"), lit(1).as("sel_rank"),
-        col("mmr_raw"))
-      .localCheckpoint()
-    for (r <- 2 to k) {
-      val remaining = cand.join(selected.select("query_id", "doc_id"),
+        col("mmr_raw")))
+    val selected = s.iterate(first, k - 1) { (sel, i) =>
+      val remaining = cand.join(sel.select("query_id", "doc_id"),
         Seq("query_id", "doc_id"), "left_anti")
       // redundancy term: for every remaining candidate, its max rounded
       // sim to the already-selected set (joins spelled via renames so no
       // ambiguous refs)
       val simToSel = pair
-        .join(selected.select(col("query_id"), col("doc_id").as("b_id")),
+        .join(sel.select(col("query_id"), col("doc_id").as("b_id")),
           Seq("query_id", "b_id"))
         .groupBy("query_id", "a_id")
         .agg(max(col("dsim")).as("maxsim"))
@@ -460,9 +461,9 @@ object Similarity {
         .withColumn("mmr_raw",
           lam * col("rel") - oneMinusLam * coalesce(col("maxsim"), lit(0.0)))
         .withColumn("rn", row_number().over(wPick)).where(col("rn") === 1)
-        .select(col("query_id"), col("doc_id"), lit(r).as("sel_rank"),
+        .select(col("query_id"), col("doc_id"), lit(i + 1).as("sel_rank"),
           col("mmr_raw"))
-      selected = selected.unionByName(pick).localCheckpoint()
+      sel.unionByName(pick)
     }
     // mmr rounds to NINE decimals, not the repo's usual six: round-1
     // scores are exactly λ·rel with rel already 6-decimal, so their

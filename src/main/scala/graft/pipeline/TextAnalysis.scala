@@ -597,26 +597,4 @@ object TextAnalysis {
         round(log(lit(nDocs.toDouble) * col("cab") / (col("c1") * col("c2"))), 6)
           .as("pmi"))
   }
-
-  /** Winnowing fingerprint: minimum rolling polynomial hash over character
-    * k-grams (k=16). Robust to word order only at gram granularity; pure
-    * Scala for use in a UDF. */
-  def winnow64(text: String, k: Int = 16): Long = {
-    if (text == null || text.length < k) return 0L
-    val B = 0x100000001b3L
-    var pow = 1L
-    var i = 0
-    while (i < k - 1) { pow *= B; i += 1 }
-    var h = 0L
-    i = 0
-    while (i < k) { h = h * B + text.charAt(i); i += 1 }
-    var min = h
-    i = k
-    while (i < text.length) {
-      h = (h - text.charAt(i - k) * pow) * B + text.charAt(i)
-      if (h < min) min = h
-      i += 1
-    }
-    min
-  }
 }

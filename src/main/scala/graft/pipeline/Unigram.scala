@@ -3,6 +3,8 @@ package graft.pipeline
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.util.Materialize
+
 /** Unigram-LM (SentencePiece-style) tokenizer induction by hard-EM prune
   * (Kudo 2018, arXiv:1804.10959) — the OTHER production tokenizer family
   * next to BPE merges ([[Bpe]]): seed a large substring vocabulary, then
@@ -117,21 +119,19 @@ object Unigram {
                               rawCnt: Map[String, Long],
                               lastNll: Map[String, Int])
 
-  private def runEm(df: DataFrame, textCol: String, maxTokLen: Int,
-                    maxWordLen: Int, maxVocab: Int, minFreq: Int,
-                    emIters: Int): EmResult = {
+  private def runEm(s: Materialize.Scope, df: DataFrame, textCol: String,
+                    maxTokLen: Int, maxWordLen: Int, maxVocab: Int,
+                    minFreq: Int, emIters: Int): EmResult = {
     require(maxTokLen >= 1 && maxWordLen >= 1 && maxVocab >= 1 &&
       minFreq >= 1 && emIters >= 1, "all unigram parameters must be >= 1")
     val spark = df.sparkSession
     // one corpus scan; every later pass is over the distinct-word relation
-    val hist = Bpe.wordHistogram(df, textCol)
-      .where(length(col("word")) <= maxWordLen)
-      .localCheckpoint()
+    val hist = s.checkpoint(Bpe.wordHistogram(df, textCol)
+      .where(length(col("word")) <= maxWordLen))
     val subUdf = udf((w: String) => cpSubstrings(w, maxTokLen))
-    val seedFreqs = hist
+    val seedFreqs = s.persist(hist
       .select(explode(subUdf(col("word"))).as("tok"), col("cnt"))
-      .groupBy("tok").agg(sum("cnt").as("freq"))
-      .persist()
+      .groupBy("tok").agg(sum("cnt").as("freq")))
     val singles = seedFreqs.where(length(col("tok")) === 1)
     val multis = seedFreqs.where(length(col("tok")) >= 2 &&
         col("freq") >= minFreq)
@@ -161,10 +161,10 @@ object Unigram {
         else if (c > 0) Some(t -> c)
         else None
       }
-      bc.unpersist()
+      bc.destroy()
       it += 1
     }
-    seedFreqs.unpersist()
+    s.release(seedFreqs)
     EmResult(hist, vocab, rawCnt, lastNll)
   }
 
@@ -179,15 +179,12 @@ object Unigram {
             emIters: Int = 2): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
-    val em = runEm(df, textCol, maxTokLen, maxWordLen, maxVocab, minFreq,
-      emIters)
     // the result below is pure driver data — unlike tokenizeDocs (whose
-    // returned DataFrame reads the histogram lazily), train can free its
-    // checkpoint immediately (at this operator's claimed scale the
+    // returned DataFrame reads the histogram lazily), train frees its
+    // checkpoint on return (at this operator's claimed scale the
     // histogram of a 100 TB corpus is billions of rows)
-    em.hist.queryExecution.analyzed.collectFirst {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
-    }.foreach(_.unpersist(false))
+    val em = Materialize.scoped(s => runEm(s, df, textCol, maxTokLen,
+      maxWordLen, maxVocab, minFreq, emIters))
     val total = em.vocab.values.sum
     em.vocab.toSeq.map { case (t, f) =>
       (t, em.rawCnt(t), centiNll(total, f))
@@ -212,30 +209,10 @@ object Unigram {
   def tokenizeDocs(df: DataFrame, idCol: String, textCol: String,
                    maxTokLen: Int = 4, maxWordLen: Int = 12,
                    maxVocab: Int = 200, minFreq: Int = 5,
-                   emIters: Int = 2): DataFrame = {
-    val em = runEm(df, textCol, maxTokLen, maxWordLen, maxVocab, minFreq,
+                   emIters: Int = 2): DataFrame = Materialize.scoped { s =>
+    val em = runEm(s, df, textCol, maxTokLen, maxWordLen, maxVocab, minFreq,
       emIters)
     encodeUnder(df, idCol, textCol, em.lastNll, maxTokLen, em.hist)
-  }
-
-  /** Encode under an ALREADY-TRAINED score table — one EM run shared
-    * between train and tokenize instead of [[tokenizeDocs]] re-running it:
-    * `scores` is a (tok, nll_c) relation (e.g. [[train]]'s output, whose
-    * `nll_c` is the post-M-step rescore — segmenting under it applies
-    * that one extra M-step relative to [[tokenizeDocs]]'s final-E-step
-    * scores; both are valid SentencePiece encode conventions). The score
-    * table must cover every single code point of the corpus's words
-    * ([[train]] guarantees singles survive), or the Viterbi require
-    * fires. Bounded driver artifact: `scores` collects (≤ vocab size —
-    * the IVF-centroid convention). */
-  def tokenizeWith(df: DataFrame, idCol: String, textCol: String,
-                   scores: DataFrame, maxTokLen: Int = 4,
-                   maxWordLen: Int = 12): DataFrame = {
-    val nll = scores.select(col("tok"), col("nll_c").cast("int"))
-      .collect().map(r => r.getString(0) -> r.getInt(1)).toMap
-    val hist = Bpe.wordHistogram(df, textCol)
-      .where(length(col("word")) <= maxWordLen)
-    encodeUnder(df, idCol, textCol, nll, maxTokLen, hist)
   }
 
   /** The shared encode tail: Viterbi each DISTINCT word under `nll`

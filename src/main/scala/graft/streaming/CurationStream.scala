@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.api.CurationPipeline
 import graft.geo.ConnectedComponents
 import graft.pipeline.{Dedup, TextAnalysis}
+import graft.util.Materialize
 
 /** Incremental form of [[graft.api.CurationPipeline]]: new documents
   * arrive as a stream and each micro-batch is curated against the
@@ -68,7 +69,7 @@ object CurationStream {
     * backfills. `batch0` columns: doc_id, text. */
   def curateBatch(batch0: DataFrame, benchmark: DataFrame, stateRoot: String,
                   outDir: String, cfg: CurationPipeline.Config,
-                  numBuckets: Int, batchId: Long = 0L): Unit = {
+                  numBuckets: Int, batchId: Long = 0L): Unit = Materialize.scoped { s =>
     val spark = batch0.sparkSession
     val B = numBuckets.toLong
     graft.functions.NgramHashes.register(spark)
@@ -77,15 +78,21 @@ object CurationStream {
     val bandIdx = s"$stateRoot/band_idx"
     val docIdx = s"$stateRoot/doc_idx"
 
-    def readPruned(dir: String, buckets: Array[Long], schema: String): DataFrame =
-      try spark.read.parquet(dir).where(col("bucket").isin(buckets: _*))
-      catch { case _: Throwable =>
-        spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
-          org.apache.spark.sql.types.StructType.fromDDL(schema))
-      }
+    // EXISTENCE decides whether an index has prior state (the
+    // EventStreams.upsertTouched rule): a read error taken for "no index
+    // yet" would re-admit duplicates, so it fails the batch before any
+    // append. The given schema skips inference and reads an index of
+    // empty appends as empty.
+    def readPruned(dir: String, buckets: Array[Long], schema: String): DataFrame = {
+      val ddl = org.apache.spark.sql.types.StructType.fromDDL(schema)
+      val path = new org.apache.hadoop.fs.Path(dir)
+      if (!path.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(path))
+        spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](), ddl)
+      else spark.read.schema(ddl).parquet(dir).where(col("bucket").isin(buckets: _*))
+    }
 
     graft.functions.MinhashBandKeys.register(spark)
-    val prep = batch0.select(col("doc_id"), col("text"))
+    val prep = s.persist(batch0.select(col("doc_id"), col("text"))
       .withColumn("text_hash", md5(col("text")))
       .withColumn("words", filter(split(col("text"), " "), w => w =!= ""))
       .withColumn("hgrams",
@@ -93,8 +100,7 @@ object CurationStream {
       .withColumn("sz", size(col("hgrams")))
       .withColumn("bands", call_function("minhash_band_keys", col("words"),
         lit(cfg.ngram), lit(cfg.numHashes), lit(cfg.bandRows)))
-      .drop("words")
-      .cache()
+      .drop("words"))
 
     // ---- stage 1: exact dedup vs state ∪ within-batch ----
     val hb = prep.select(pmod(xxhash64(col("text_hash")), lit(B)).as("bucket"))
@@ -158,19 +164,17 @@ object CurationStream {
       .unionByName(verify(cross, stateDocs))
       .select(col("a_id").as("a"), col("b_id").as("b"))
     val labels = ConnectedComponents.label(spark, edges)
-    val resolved = exactKept.select("doc_id")
+    val resolved = s.persist(exactKept.select("doc_id")
       .join(labels, col("doc_id") === col("node"), "left")
       .select(col("doc_id"),
         coalesce(col("cluster"), col("doc_id")).as("cluster_id"))
-      .withColumn("near_keep", col("doc_id") === col("cluster_id"))
-      .cache()
+      .withColumn("near_keep", col("doc_id") === col("cluster_id")))
 
     // ---- stages 3-5: signals over dedup survivors only (as the batch
     // funnel does) ----
-    val survivors = exactKept.join(
+    val survivors = s.persist(exactKept.join(
         resolved.where(col("near_keep")).select("doc_id"),
-        Seq("doc_id"), "left_semi")
-      .cache()
+        Seq("doc_id"), "left_semi"))
     val contam = Dedup.contaminationFlags(
         survivors.select("doc_id", "text"), benchmark, "doc_id", "text",
         cfg.decontamNgram, cfg.maxContamFrac)
@@ -181,7 +185,8 @@ object CurationStream {
       TextAnalysis.bpeishTokenCount(col("text")).as("n_tokens"),
       TextAnalysis.qualityScore(col("text")).as("quality_score"))
 
-    val verdict = prep.select("doc_id")
+    // one materialization feeds the 4 writes below
+    val verdict = s.checkpoint(prep.select("doc_id")
       .join(exact.where(col("exact_dup")), Seq("doc_id"), "left")
       .join(resolved, Seq("doc_id"), "left")
       .join(contam, Seq("doc_id"), "left")
@@ -197,8 +202,7 @@ object CurationStream {
         coalesce(col("cluster_id"), col("doc_id")).as("cluster_id"),
         col("contaminated_frac"),
         col("lang"), col("n_tokens"), col("quality_score"),
-        col("drop_reason"), col("drop_reason").isNull.as("keep"))
-      .localCheckpoint(true) // one materialization feeds 4 writes below
+        col("drop_reason"), col("drop_reason").isNull.as("keep")))
 
     // ---- state + output appends (kept docs enter the indexes) ----
     val kept = verdict.where(col("keep")).select("doc_id")
@@ -222,10 +226,5 @@ object CurationStream {
       .write.mode("overwrite")
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy("batch_id").parquet(outDir)
-
-    survivors.unpersist(false)
-    resolved.unpersist(false)
-    prep.unpersist(false)
-    ()
   }
 }

@@ -5,6 +5,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import java.sql.Timestamp
 
+import graft.util.Materialize
+
 /** Structured-Streaming re-expression of the reference's micro-batch
   * incremental semantics (SURVEY §2 J): the OsmSyncBot diff-window loop
   * becomes a watermarked event-time stream; per-tile cache invalidation
@@ -375,33 +377,26 @@ object EventStreams {
     * gives a batch-only merge; any other read error fails the batch, so
     * the checkpoint retries it. An empty batch touches nothing and writes
     * nothing (an empty write would leave a `stateDir` with no schema to
-    * read). `deduped`'s cache and the merge checkpoint are both released
-    * before returning, so no persisted RDD outlives the batch. */
+    * read). `deduped`'s cache and the merge checkpoint are both scoped to
+    * the call, so no persisted RDD outlives the batch. */
   private def upsertTouched(deduped: DataFrame, stateDir: String, partCol: String,
                             lastWins: org.apache.spark.sql.expressions.WindowSpec)
-                           (write: DataFrame => Unit): Unit = {
+                           (write: DataFrame => Unit): Unit = Materialize.scoped { s =>
     val spark = deduped.sparkSession
-    deduped.cache() // two consumers: touched-partition list + merge
-    try {
-      // ≤ the batch's distinct partitions — a driver-side list, never the data
-      val touched = deduped.select(partCol).distinct().collect().map(_.get(0))
-      if (touched.nonEmpty) {
-        val path = new org.apache.hadoop.fs.Path(stateDir)
-        val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val merged = (if (!fs.exists(path)) deduped
-          else spark.read.parquet(stateDir).where(col(partCol).isin(touched: _*))
-            .unionByName(deduped, allowMissingColumns = true)
-            .withColumn("rn", row_number().over(lastWins))
-            .where(col("rn") === 1).drop("rn"))
-          // materialize BEFORE the write: the merge plan reads stateDir,
-          // and Spark (correctly) refuses to overwrite a path it is
-          // reading from in the same plan
-          .localCheckpoint(true)
-        try write(merged)
-        finally merged.queryExecution.analyzed.collectFirst {
-          case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
-        }.foreach(_.unpersist(false))
-      }
-    } finally deduped.unpersist(false)
+    s.persist(deduped) // two consumers: touched-partition list + merge
+    // ≤ the batch's distinct partitions — a driver-side list, never the data
+    val touched = deduped.select(partCol).distinct().collect().map(_.get(0))
+    if (touched.nonEmpty) {
+      val path = new org.apache.hadoop.fs.Path(stateDir)
+      val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      // materialize BEFORE the write: the merge plan reads stateDir, and
+      // Spark (correctly) refuses to overwrite a path it is reading from
+      // in the same plan
+      write(s.checkpoint(if (!fs.exists(path)) deduped
+        else spark.read.parquet(stateDir).where(col(partCol).isin(touched: _*))
+          .unionByName(deduped, allowMissingColumns = true)
+          .withColumn("rn", row_number().over(lastWins))
+          .where(col("rn") === 1).drop("rn")))
+    }
   }
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
 import graft.pipeline.Sketches
+import graft.util.Materialize
 
 /** Incremental Count-Min sketch materialized view — the streaming form of
   * the x4 sketch family: each micro-batch builds its own bounded sketch
@@ -56,24 +57,19 @@ object SketchStream {
           val m = st.agg(max("last_batch")).head()
           if (m.isNullAt(0)) -1L else m.getLong(0)
         }.getOrElse(-1L)
-        if (batchId > lastApplied) {
+        // a scope frees THIS batch's checkpoint once written — a running
+        // stream would otherwise accumulate one persisted RDD per batch
+        if (batchId > lastApplied) Materialize.scoped { s =>
           val batchSketch = Sketches.countMin(batch, itemCol, depth, width)
-          val merged = (existing match {
+          // materialize BEFORE the overwrite: the merge plan reads
+          // stateDir and Spark refuses to overwrite a read path
+          s.checkpoint((existing match {
             case Some(st) => st.select("j", "bucket", "cnt")
               .unionByName(batchSketch)
               .groupBy("j", "bucket").agg(sum("cnt").as("cnt"))
             case None => batchSketch
-          }).withColumn("last_batch", lit(batchId))
-            // materialize BEFORE the overwrite: the merge plan reads
-            // stateDir and Spark refuses to overwrite a read path
-            .localCheckpoint(true)
-          merged.write.mode("overwrite").parquet(stateDir)
-          // free THIS batch's checkpoint once written — an indefinitely
-          // running stream would otherwise accumulate one persisted RDD
-          // per micro-batch (the Bpe.train leak, streaming edition)
-          merged.queryExecution.analyzed.collectFirst {
-            case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
-          }.foreach(_.unpersist(false))
+          }).withColumn("last_batch", lit(batchId)))
+            .write.mode("overwrite").parquet(stateDir)
         }
         ()
       }

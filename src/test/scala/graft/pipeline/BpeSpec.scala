@@ -268,41 +268,6 @@ class BpeSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(rounds < 60, s"batching degenerated: $rounds rounds for 100 merges")
   }
 
-  test("trainFast: far fewer rounds, high merge-set overlap, exact when conflict-free") {
-    import spark.implicits._
-    // conflict-free corpus: identical to exact training
-    val disjoint = Map("ab" -> 100L, "cd" -> 90L, "ef" -> 80L, "gh" -> 70L)
-    val dhist = disjoint.toSeq.toDF("word", "cnt")
-    val (fastD, roundsD) = Bpe.trainFast(dhist, numMerges = 4)
-    assert(fastD.map(m => (m.left, m.right, m.freq)) == scalarBpe(disjoint, 4))
-    assert(roundsD == 1)
-
-    // realistic text: conflicts are skipped instead of batch-ending, so
-    // rounds collapse well below the exact batcher's while the merge SET
-    // stays close to sequential (the documented production trade)
-    val vocabWords = Seq("the", "quick", "brown", "foxes", "jumped", "over",
-      "lazy", "dogs", "while", "evening", "rivers", "glistened", "under",
-      "amber", "skies", "travelers", "rested", "beside", "ancient", "stones")
-    val rnd = new scala.util.Random(42)
-    val words = (1 to 4000).map(_ =>
-        vocabWords(math.min(rnd.nextInt(rnd.nextInt(vocabWords.length) + 1),
-          vocabWords.length - 1)))
-      .groupBy(identity).map { case (w, ws) => w -> ws.size.toLong }
-    val hist = words.toSeq.toDF("word", "cnt")
-    // 30 merges: the Zipf-structured head, where a production tokenizer
-    // spends its budget (the deep tail of a 20-word toy vocabulary is
-    // tie-dominated and order-chaotic for ANY batching rule)
-    val (exact, exactRounds) = Bpe.trainRounds(hist, numMerges = 30)
-    val (fast, fastRounds) = Bpe.trainFast(hist, numMerges = 30)
-    assert(fastRounds < exactRounds,
-      s"fast=$fastRounds vs exact=$exactRounds rounds")
-    assert(fastRounds <= 12, s"fastRounds=$fastRounds")
-    val exactSet = exact.map(m => (m.left, m.right)).toSet
-    val fastSet = fast.map(m => (m.left, m.right)).toSet
-    val overlap = (exactSet & fastSet).size.toDouble / exactSet.size
-    assert(overlap >= 0.8, s"merge-set overlap $overlap")
-  }
-
   test("tiny-batchK fuzz: truncated candidate lists stay scalar-exact") {
     import spark.implicits._
     // batchK far below the live pair count forces the truncation path

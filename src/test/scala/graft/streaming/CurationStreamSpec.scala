@@ -112,4 +112,50 @@ class CurationStreamSpec extends AnyFunSuite {
       assert(second === first)
     }
   }
+  /** Every regular file under `dir`, relative path → bytes. */
+  private def snapshot(dir: String): Map[String, Seq[Byte]] = {
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get(dir)
+    val walk = java.nio.file.Files.walk(root)
+    try walk.iterator().asScala.filter(java.nio.file.Files.isRegularFile(_))
+      .map(f => root.relativize(f).toString -> java.nio.file.Files.readAllBytes(f).toSeq)
+      .toMap
+    finally walk.close()
+  }
+
+  test("a corrupt band index fails the next batch before any index is appended") {
+    withSpark { spark =>
+      import spark.implicits._
+      val tmp = java.nio.file.Files.createTempDirectory("curation-corrupt").toFile
+      val state = new java.io.File(tmp, "state").getAbsolutePath
+      val out = new java.io.File(tmp, "out").getAbsolutePath
+      val bench = Seq(100L -> benchText).toDF("doc_id", "text")
+      val cfg = CurationPipeline.Config()
+
+      // no index yet: a batch-only pass
+      CurationStream.curateBatch(corpus.filter(_._1 <= 3).toDF("doc_id", "text"),
+        bench, state, out, cfg, 64, batchId = 0L)
+      val verdicts = spark.read.parquet(out).collect()
+        .map(r => r.getAs[Long]("doc_id") -> r.getAs[String]("drop_reason")).toMap
+      assert(verdicts == Map(1L -> null, 2L -> "exact_duplicate", 3L -> "near_duplicate"))
+
+      // every band_idx part file becomes unreadable; batch 2 (doc 6 shares
+      // doc 1's bands) must fail rather than read the index as empty and
+      // re-admit doc 6
+      val bandParts = snapshot(s"$state/band_idx").keys
+        .filter(_.split('/').last.startsWith("part-"))
+      assert(bandParts.nonEmpty)
+      bandParts.foreach { rel =>
+        val f = new java.io.File(s"$state/band_idx", rel)
+        java.nio.file.Files.write(f.toPath, "not a parquet file".getBytes("UTF-8"))
+        new java.io.File(f.getParentFile, s".${f.getName}.crc").delete()
+      }
+      val before = snapshot(state)
+      intercept[Exception] {
+        CurationStream.curateBatch(corpus.filter(_._1 > 3).toDF("doc_id", "text"),
+          bench, state, out, cfg, 64, batchId = 1L)
+      }
+      assert(snapshot(state) == before)
+    }
+  }
 }

@@ -14,8 +14,13 @@ done
 for p in sun.nio.ch sun.nio.cs sun.security.action sun.util.calendar; do
   ADD_OPENS="$ADD_OPENS --add-opens java.base/$p=ALL-UNNAMED"
 done
+# default heap: build.sbt's rule — half of physical RAM, clamped to 4-32 GiB
+# (16 GiB assumed when /proc/meminfo is unreadable); SPARK_DRIVER_MEM overrides
+PHYS_GB=$(awk '/^MemTotal:/ {print int($2 / 1048576)}' /proc/meminfo 2>/dev/null || true)
+HEAP_GB=$(( ${PHYS_GB:-16} / 2 ))
+HEAP_GB=$(( HEAP_GB < 4 ? 4 : HEAP_GB > 32 ? 32 : HEAP_GB ))
 exec java $ADD_OPENS \
-  -Xmx"${SPARK_DRIVER_MEM:-32g}" \
+  -Xmx"${SPARK_DRIVER_MEM:-${HEAP_GB}g}" \
   -Dspark.ui.enabled=false \
   -Dspark.sql.session.timeZone=UTC \
   -cp "$CLASSES:/opt/spark/jars/*" "$@"
